@@ -1,7 +1,11 @@
-.PHONY: test test-slow bench verify audit audit-hostile fixtures smoke probe
+.PHONY: test tier1 test-slow bench perfbench verify audit audit-hostile fixtures smoke probe
 
 test:
 	python -m pytest tests/ -q
+
+# the tier-1 gate exactly as ROADMAP.md states it
+tier1:
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 verify:
 	cd /tmp && python $(CURDIR)/scripts/verify_sweep.py
@@ -27,6 +31,12 @@ test-slow:
 
 bench:
 	python bench.py
+
+# one benchmark run: make perfbench W=clickstream_ticks SEED=1
+W ?= clickstream_ticks
+SEED ?= 1
+perfbench:
+	python3 perfbench/run.py --workload $(W) --seed $(SEED) --seconds 10 --trace 0
 
 smoke:
 	python -c "import __spark_entry__ as E; \

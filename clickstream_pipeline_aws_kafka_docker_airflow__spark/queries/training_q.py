@@ -359,7 +359,6 @@ def vocab_encode(spark, sf_dir):
         "token",
         F.row_number()
         .over(Window.orderBy(F.col("n").desc(), "token"))
-        .cast("int")
         .alias("id"),
     )
     return encode_with_vocab_df(d, vocab)

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.anomaly import trailing_z_flags
-from ..session import temp_confs
+from .upsert import overwrite_partitions, start_partition_keyed
 
 
 def _history_zone(out_dir: str) -> str:
@@ -53,19 +53,12 @@ def start_anomaly_monitor(
     def _upsert_and_score(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
+        overwrite_partitions(
+            batch_df.withColumn("hour_key", F.concat_ws("-", "dt", "hh")),
+            _history_zone(out_dir),
+            "hour_key",
+        )
         spark = batch_df.sparkSession
-        with temp_confs(
-            spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-        ):
-            (
-                batch_df.withColumn(
-                    "hour_key", F.concat_ws("-", "dt", "hh")
-                )
-                .repartition(1)
-                .write.partitionBy("hour_key")
-                .mode("overwrite")
-                .parquet(_history_zone(out_dir))
-            )
         history = (
             spark.read.parquet(_history_zone(out_dir))
             .select("dt", "hh", "c")
@@ -75,13 +68,8 @@ def start_anomaly_monitor(
             _flags_zone(out_dir)
         )
 
-    return (
-        hourly.writeStream.foreachBatch(_upsert_and_score)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    # the hour is the group key: one state partition (streaming/upsert.py)
+    return start_partition_keyed(hourly, _upsert_and_score, checkpoint_dir)
 
 
 def load_flags(spark, out_dir: str) -> DataFrame:

@@ -37,7 +37,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import token_hash32_sql
 from ..queries.sketch_q import CMSZ_D, CMSZ_W
-from ..session import temp_confs
+from .upsert import overwrite_partitions
 
 COMPACTED_LAYER = -1  # first compacted-generation id; later ones -2, -3, ...
 MANIFEST_SLOT = -1  # s value marking in-band manifest rows
@@ -117,17 +117,11 @@ def start_cms_zone(
         if batch_df.isEmpty():
             return
         cells = _cells(batch_df, ts_col, key_col)
-        with temp_confs(
-            batch_df.sparkSession,
-            {"spark.sql.sources.partitionOverwriteMode": "dynamic"},
-        ):
-            (
-                cells.withColumn("batch_id", F.lit(batch_id))
-                .repartition(1)
-                .write.partitionBy("batch_id")
-                .mode("overwrite")
-                .parquet(zone_dir)
-            )
+        overwrite_partitions(
+            cells.withColumn("batch_id", F.lit(batch_id)).repartition(1),
+            zone_dir,
+            "batch_id",
+        )
 
     return (
         stream_events.writeStream.foreachBatch(_layer)
@@ -205,16 +199,11 @@ def _compact_body(
         )
         .localCheckpoint()  # materialize before touching source files
     )
-    with temp_confs(
-        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-    ):
-        (
-            out.withColumn("batch_id", F.lit(new_id))
-            .repartition(1)
-            .write.partitionBy("batch_id")
-            .mode("overwrite")
-            .parquet(zone_dir)
-        )
+    overwrite_partitions(
+        out.withColumn("batch_id", F.lit(new_id)).repartition(1),
+        zone_dir,
+        "batch_id",
+    )
     # ---- commit point passed; everything below is garbage collection
     _gc_layers(
         spark,

@@ -43,8 +43,8 @@ from ..operators.dedup import (
     minhash_signatures,
     shingle_table,
 )
-from ..session import temp_confs
 from .release import checkpoint_release_scope
+from .upsert import overwrite_partitions
 
 # admit a new doc only if its signature agrees with every stored
 # signature on FEWER than this many of the NUM_HASHES minhashes
@@ -152,22 +152,14 @@ def _dedup_one_batch_body(
         sigs = sigs.join(F.broadcast(rejected), "doc_id", "left_anti")
 
     # 3) admit: batch-keyed partitions -> replay rewrites, never appends
-    with temp_confs(
-        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    for df, zone in (
+        (keep, _docs_zone(corpus_dir)),
+        (sigs, _sigs_zone(corpus_dir)),
     ):
-        (
-            keep.withColumn("batch_id", F.lit(batch_id))
-            .repartition(1)
-            .write.partitionBy("batch_id")
-            .mode("overwrite")
-            .parquet(_docs_zone(corpus_dir))
-        )
-        (
-            sigs.withColumn("batch_id", F.lit(batch_id))
-            .repartition(1)
-            .write.partitionBy("batch_id")
-            .mode("overwrite")
-            .parquet(_sigs_zone(corpus_dir))
+        overwrite_partitions(
+            df.withColumn("batch_id", F.lit(batch_id)).repartition(1),
+            zone,
+            "batch_id",
         )
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession, functions as F
 
 
@@ -26,7 +27,8 @@ def check_freshness(
     the lookback window. Raises (AnalysisException) if the whole ROOT
     is missing — a misconfigured path must page differently than
     staleness; an empty/missing day partition is simply stale (False),
-    matching the reference's fail path.
+    matching the reference's fail path. Any other read failure (e.g. an
+    unknown ``fmt``) raises.
 
     The read passes a trivial one-column schema: a schema-LESS json
     read would run full schema inference over the day partition at
@@ -41,8 +43,12 @@ def check_freshness(
         raise FileNotFoundError(f"raw zone root missing: {raw_path}")
     try:
         df = spark.read.format(fmt).schema("value STRING").load(path)
-    except Exception:
-        return False  # day partition absent -> stale, not an error
+    except AnalysisException as e:
+        # only an absent day partition is "stale"; any other failure (a
+        # bad format, a permissions error) must propagate
+        if (e.getCondition() or "") != "PATH_NOT_FOUND":
+            raise
+        return False
     cutoff = F.current_timestamp() - F.expr(f"INTERVAL {lookback_minutes} MINUTES")
     fresh = df.select(
         F.col("_metadata.file_modification_time").alias("mtime")

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..queries.misc_q import KNOWN_EVENT_TYPES
-from ..session import temp_confs
+from .upsert import overwrite_partitions
 
 
 def _event_checks() -> dict[str, Column]:
@@ -72,7 +72,6 @@ def metrics_zone(gate_dir: str) -> str:
 
 
 def _gate_one_batch(batch_df: DataFrame, batch_id: int, gate_dir: str) -> None:
-    spark = batch_df.sparkSession
     if batch_df.isEmpty():
         return
     checks = _event_checks()
@@ -110,21 +109,16 @@ def _gate_one_batch(batch_df: DataFrame, batch_id: int, gate_dir: str) -> None:
         ).alias("m")
     ).select("m.*")
 
-    with temp_confs(
-        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    for df, zone in (
+        (accepted, accepted_zone(gate_dir)),
+        (quarantined, quarantine_zone(gate_dir)),
+        (metrics, metrics_zone(gate_dir)),
     ):
-        for df, zone in (
-            (accepted, accepted_zone(gate_dir)),
-            (quarantined, quarantine_zone(gate_dir)),
-            (metrics, metrics_zone(gate_dir)),
-        ):
-            (
-                df.withColumn("batch_id", F.lit(batch_id))
-                .repartition(1)
-                .write.partitionBy("batch_id")
-                .mode("overwrite")
-                .parquet(zone)
-            )
+        overwrite_partitions(
+            df.withColumn("batch_id", F.lit(batch_id)).repartition(1),
+            zone,
+            "batch_id",
+        )
 
 
 def start_quality_gate(

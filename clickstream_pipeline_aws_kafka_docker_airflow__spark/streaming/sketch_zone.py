@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..session import temp_confs
+from .upsert import start_partition_upsert
 
 # lg_k PINNED TO 12 — the DataSketches union gadget's default lgMaxK,
 # which Spark's hll_union_agg does not widen (plan signature
@@ -56,8 +56,9 @@ def start_sketch_zone(
     watermark: str = "1 day",
 ) -> StreamingQuery:
     """Watermarked per-day sketch aggregation -> day-partitioned zone
-    upsert. Late events inside the watermark re-emit their day's
-    cumulative sketch and overwrite that single partition."""
+    upsert (``upsert.start_partition_upsert``: the day is the group key,
+    so one state partition). Late events inside the watermark re-emit
+    their day's cumulative sketch and overwrite that single partition."""
     daily = (
         stream_events.withWatermark(ts_col, watermark)
         .groupBy(F.window(ts_col, "1 day").alias("w"))
@@ -68,27 +69,7 @@ def start_sketch_zone(
         )
     )
 
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with temp_confs(
-            batch_df.sparkSession,
-            {"spark.sql.sources.partitionOverwriteMode": "dynamic"},
-        ):
-            (
-                batch_df.repartition(1)
-                .write.partitionBy("dt")
-                .mode("overwrite")
-                .parquet(zone_dir)
-            )
-
-    return (
-        daily.writeStream.foreachBatch(_upsert)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_partition_upsert(daily, zone_dir, checkpoint_dir, partition_col="dt")
 
 
 def range_distinct_from_zone(

@@ -24,6 +24,23 @@ Two granularities, chosen by ``keys``:
   a replayed batch re-emits identical rows, the anti-join removes the
   identical previous copies, and the rewrite reproduces byte-identical
   content.
+
+State partitions: a stateful query gets ``spark.sql.shuffle.partitions``
+state stores, and every micro-batch loads, commits and snapshots each
+one, empty or not. When the group key IS the zone partition, the
+watermark keeps one or two keys live (a day window under a 1-day
+watermark), so ``start_partition_keyed`` starts such streams with ONE
+state partition: the partition-replace path, the sketch zone and the
+anomaly monitor. The merge path's key is finer than the partition; it
+keeps the session's count. The checkpoint's offset log pins the count,
+so an existing checkpoint keeps its own; re-sizing a zone means a fresh
+checkpoint (the upsert is replay-idempotent, so replaying the source
+rewrites the same partitions with the same content).
+
+Measured and rejected: also turning off no-data micro-batches. Under
+AvailableNow each run restarts from the offset log and only the no-data
+batch commits the advanced watermark, so the watermark froze across
+runs and late-day repair broke (``test_run_sketch_backfill_repairs_late_day``).
 """
 
 from __future__ import annotations
@@ -32,10 +49,49 @@ from collections.abc import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..session import temp_confs
 from .release import checkpoint_release_scope
+
+
+def overwrite_partitions(df: DataFrame, path: str, partition_col: str) -> None:
+    """Replace exactly the ``partition_col`` partitions present in
+    ``df`` under ``path`` (dynamic partition overwrite); every other
+    partition is left as it is."""
+    with temp_confs(
+        df.sparkSession, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
+        df.write.partitionBy(partition_col).mode("overwrite").parquet(path)
+
+
+def _update_writer(
+    stream_df: DataFrame,
+    batch_fn: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> DataStreamWriter:
+    return (
+        stream_df.writeStream.foreachBatch(batch_fn)
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
+
+
+def start_partition_keyed(
+    stream_df: DataFrame,
+    batch_fn: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Start an update-mode AvailableNow foreachBatch stream whose
+    group key is the zone partition, with one state partition (see
+    module docstring). The stream clones its session inside
+    ``start()``, so the conf is scoped to that call and the caller's
+    session is left unchanged."""
+    with temp_confs(
+        stream_df.sparkSession, {"spark.sql.shuffle.partitions": "1"}
+    ):
+        return _update_writer(stream_df, batch_fn, checkpoint_dir).start()
 
 
 def start_partition_upsert(
@@ -59,46 +115,34 @@ def start_partition_upsert(
         # deterministic storage occupancy instead of wait-for-GC
         # (streaming/release.py)
         with checkpoint_release_scope(spark):
-            _upsert_body(spark, out)
+            if keys:
+                out = _merge_survivors(spark, out)
+            overwrite_partitions(out, path, partition_col)
 
-    def _upsert_body(spark, out: DataFrame) -> None:
-        if keys:
-            # key-level merge: keep the affected partitions' rows whose
-            # group key is NOT being re-emitted in this batch
-            out = out.localCheckpoint(eager=False)
-            affected = [
-                r[0] for r in out.select(partition_col).distinct().collect()
-            ]
-            try:
-                existing = spark.read.parquet(path).where(
-                    F.col(partition_col).isin(affected)
-                )
-                survivors = existing.join(
-                    F.broadcast(out.select(*keys).distinct()),
-                    keys,
-                    "left_anti",
-                )
-                # pin BEFORE the overwrite: the plan still reads the
-                # files the write is about to replace
-                out = survivors.unionByName(out).localCheckpoint()
-            except AnalysisException as e:
-                # only a missing zone means "first batch"; real read
-                # failures must propagate, not silently skip the merge
-                if (e.getCondition() or "") != "PATH_NOT_FOUND":
-                    raise
-        with temp_confs(
-            spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-        ):
-            (
-                out.write.partitionBy(partition_col)
-                .mode("overwrite")
-                .parquet(path)
+    def _merge_survivors(spark, out: DataFrame) -> DataFrame:
+        # key-level merge: keep the affected partitions' rows whose
+        # group key is NOT being re-emitted in this batch
+        out = out.localCheckpoint(eager=False)
+        affected = [
+            r[0] for r in out.select(partition_col).distinct().collect()
+        ]
+        try:
+            existing = spark.read.parquet(path).where(
+                F.col(partition_col).isin(affected)
             )
+        except AnalysisException as e:
+            # only a missing zone means "first batch"; real read
+            # failures must propagate, not silently skip the merge
+            if (e.getCondition() or "") != "PATH_NOT_FOUND":
+                raise
+            return out
+        survivors = existing.join(
+            F.broadcast(out.select(*keys).distinct()), keys, "left_anti"
+        )
+        # pin BEFORE the overwrite: the plan still reads the files the
+        # write is about to replace
+        return survivors.unionByName(out).localCheckpoint()
 
-    return (
-        stream_df.writeStream.foreachBatch(_upsert)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    if keys:
+        return _update_writer(stream_df, _upsert, checkpoint_dir).start()
+    return start_partition_keyed(stream_df, _upsert, checkpoint_dir)

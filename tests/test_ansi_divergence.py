@@ -57,6 +57,7 @@ from conftest import SF_SMOKE
 
 import importlib.util
 import os
+import re
 
 
 def _load(modname: str):
@@ -200,10 +201,17 @@ def test_try_element_at_census(plans):
         "overflow) instead of NULL — adjudicate the index domain or "
         f"use a map lookup: {sorted(found - {'vocab_encode'})}"
     )
-    # the allowed site is a MAP-key lookup — no positional index path
+    # the allowed site is a MAP-key lookup — no positional index path.
+    # The map is either a literal or encode_with_vocab_df's broadcast
+    # ``_vmap`` column, which the plan must build with map_from_entries
     if "vocab_encode" in found:
-        sites = call_sites(plans["vocab_encode"], "try_element_at")
-        assert sites and all(a[0].startswith("map(") for a in sites), sites
+        plan = plans["vocab_encode"]
+        sites = call_sites(plan, "try_element_at")
+        assert sites and all(
+            a[0].startswith("map(") or a[0] == "_vmap" for a in sites
+        ), sites
+        if any(a[0] == "_vmap" for a in sites):
+            assert re.search(r"map_from_entries\(.*\) AS _vmap#", plan), plan
 
 
 _FLOOR_CEIL_ALLOWED = {

@@ -62,3 +62,13 @@ def test_no_schema_inference_scan(spark, tmp_path):
         sc._jsc.sc().clearJobGroup()
     jobs = sc.statusTracker().getJobIdsForGroup("hc-probe") or []
     assert len(jobs) <= 1, "schema inference ran extra jobs"
+
+
+def test_unreadable_day_raises_not_stale(spark, tmp_path):
+    """Only an absent day partition reads as stale; any other read
+    failure (here an unknown source format) must propagate."""
+    _write_day(tmp_path, _DAY)
+    with pytest.raises(Exception, match="DATA_SOURCE_NOT_FOUND"):
+        check_freshness(
+            spark, str(tmp_path), lookback_minutes=20, fmt="no_such_format"
+        )

@@ -15,6 +15,8 @@ from clickstream_pipeline_aws_kafka_docker_airflow__spark.streaming.sketch_zone 
     start_sketch_zone,
 )
 
+from conftest import state_layout, state_partitions_from_session
+
 
 def _mk_events(spark):
     base = dt.datetime(2025, 9, 1, 0, 0)
@@ -262,3 +264,63 @@ def test_sketch_backfill_reversed_range_raises(spark, tmp_path):
         run_sketch_backfill(
             spark, str(tmp_path), str(tmp_path / "z"), "2025-09-02", "2025-09-01"
         )
+
+
+def _day_estimates(spark, zone):
+    return {
+        str(r.dt): r.est
+        for r in spark.read.parquet(zone)
+        .select("dt", F.hll_sketch_estimate("sk").alias("est"))
+        .collect()
+    }
+
+
+def _batch_estimates(df):
+    return {
+        str(r.dt): r.est
+        for r in df.groupBy(F.to_date("ts").cast("string").alias("dt"))
+        .agg(
+            F.hll_sketch_estimate(
+                F.hll_sketch_agg("user_id", F.lit(SKETCH_LG_K))
+            ).alias("est")
+        )
+        .collect()
+    }
+
+
+def test_sketch_zone_uses_one_state_partition(spark, tmp_path):
+    """The day is the group key and the zone partition: a fresh
+    checkpoint pins one state partition, and the caller's session
+    keeps its own count."""
+    session_n = spark.conf.get("spark.sql.shuffle.partitions")
+    df = _mk_events(spark)
+    df.coalesce(1).write.parquet(str(tmp_path / "src"))
+    zone, ckpt = str(tmp_path / "zone"), str(tmp_path / "ckpt")
+    _drain(spark, str(tmp_path / "src"), df.schema, zone, ckpt)
+    assert state_layout(ckpt) == ("1", [0])
+    assert spark.conf.get("spark.sql.shuffle.partitions") == session_n
+    assert _day_estimates(spark, zone) == _batch_estimates(df)
+
+
+def test_sketch_zone_existing_checkpoint_keeps_state_partitions(
+    spark, tmp_path
+):
+    """A sketch checkpoint created with 8 state partitions restarts
+    under the current start with its 8 partitions, and the zone gains
+    the new day with the batch sketch's estimate."""
+    df = _mk_events(spark)
+    first = df.where(F.to_date("ts") < "2025-09-04")
+    first.coalesce(1).write.parquet(str(tmp_path / "src" / "b1"))
+    src = str(tmp_path / "src" / "*")
+    zone, ckpt = str(tmp_path / "zone"), str(tmp_path / "ckpt")
+    with state_partitions_from_session(spark, 8):
+        _drain(spark, src, df.schema, zone, ckpt)
+    assert state_layout(ckpt) == ("8", list(range(8)))
+    assert _day_estimates(spark, zone) == _batch_estimates(first)
+
+    df.where(F.to_date("ts") == "2025-09-04").coalesce(1).write.parquet(
+        str(tmp_path / "src" / "b2")
+    )
+    _drain(spark, src, df.schema, zone, ckpt)
+    assert state_layout(ckpt) == ("8", list(range(8)))
+    assert _day_estimates(spark, zone) == _batch_estimates(df)

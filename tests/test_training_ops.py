@@ -5,6 +5,8 @@ independently with numpy/pandas."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 
 from clickstream_pipeline_aws_kafka_docker_airflow__spark import registry
@@ -150,18 +152,45 @@ def test_vocab_encode_roundtrip(spark):
     assert oov_seen  # V is chosen so OOV actually occurs on driver data
 
 
+def _bnlj_stream_side(text: str) -> list[tuple[str, str]]:
+    """(node name, node details) of every node under the streamed
+    (left) child of the plan's BroadcastNestedLoopJoin."""
+    tree, _, details = text.partition("\n\n\n")
+    lines = tree.splitlines()
+    j = next(i for i, ln in enumerate(lines) if "BroadcastNestedLoopJoin" in ln)
+    col = lines[j + 1].index(":- ")
+    ids = []
+    for ln in lines[j + 1 :]:
+        if ln[col : col + 1] != ":":
+            break
+        ids += re.findall(r"\((\d+)\)$", ln)
+    blocks = {
+        m.group(1): (m.group(2), m.group(3))
+        for m in re.finditer(
+            r"^\((\d+)\) (\S+).*?\n(.*?)(?=\n\n|\Z)", details, re.M | re.S
+        )
+    }
+    return [blocks[i] for i in ids]
+
+
 def test_vocab_encode_is_projection_only(spark):
-    # encoding plan: literal map + transform — no join, no explode of
-    # the corpus (the vocab agg ran separately via
-    # TakeOrderedAndProject at build time). The ONE permitted exchange
-    # is widen()'s round-robin over the raw scan (r8; no-op at
-    # production split counts) — never a hash/range shuffle.
+    # the corpus is encoded by a projection against a broadcast map:
+    # the vocabulary side (explode, token aggregate, bounded top-V
+    # ranking) is built once and broadcast, and the corpus scan streams
+    # through the join with no shuffle of its own. The ONE permitted
+    # exchange over the corpus is widen()'s round-robin over the raw
+    # scan (r8; no-op at production split counts) — never a hash/range
+    # shuffle, and never an explode of the corpus.
     f = plan_facts(_Q["vocab_encode"](spark, SF_SMOKE))
-    assert f.exchanges <= 1, f.text
-    if f.exchanges == 1:
-        assert "roundrobin" in f.text.lower(), f.text
-        assert "hashpartitioning" not in f.text.lower(), f.text
-    assert "Generate explode" not in f.text
+    assert "BroadcastNestedLoopJoin Inner BuildRight" in f.text, f.text
+    assert "TakeOrderedAndProject" in f.text, f.text
+    corpus = _bnlj_stream_side(f.text)
+    assert any(name == "Scan" for name, _ in corpus), f.text
+    exchanges = [d for name, d in corpus if name == "Exchange"]
+    assert len(exchanges) <= 1, f.text
+    for d in exchanges:
+        assert "RoundRobinPartitioning" in d, f.text
+    assert not any(name == "Generate" for name, _ in corpus), f.text
     assert f.python_evals == 0
 
 
