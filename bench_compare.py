@@ -163,7 +163,6 @@ def main() -> None:
     )
 
     shutil.rmtree(artifacts.ARTIFACT_ROOT, ignore_errors=True)
-    shutil.rmtree("/tmp/spark_graft_quantizers", ignore_errors=True)
     s_cold: dict[str, float] = {}
     build_sec: dict[str, dict[str, float]] = {}
     cold_errors: dict[str, str] = {}

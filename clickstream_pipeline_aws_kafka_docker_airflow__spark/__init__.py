@@ -7,6 +7,7 @@ Layout:
     session.py   SparkSession bootstrap + engine confs
     schemas.py   explicit StructTypes (clickstream event, star schema)
     io.py        table loaders + partitioned sinks
+    memo.py      the one driver-side memo (bounded LRU, data-identity keys)
     functions/   scalar/text/vector Column builders (no Python UDFs)
     operators/   batch operators (KPIs, relational, dedup, similarity...)
     sources/     Kafka / JSONL / synthetic-generator sources

@@ -14,6 +14,13 @@ from pyspark.sql import Column, functions as F
 # Event-type classification sets — daily_kpis.py:124-127.
 PAGEVIEW_TYPES = ("page_view", "pageview", "view")
 PURCHASE_TYPES = ("purchase", "order", "checkout")
+# The event-type vocabulary the quality gate and expectations_audit
+# accept: the driver testdata's types plus the reference producer's
+# (produce_events.py:29-32, mirrored by sources/generator.py).
+KNOWN_EVENT_TYPES = (
+    "view", "click", "purchase", "signup", "error",
+    "page_view", "add_to_cart", "checkout",
+)
 
 
 def _col(c: Column | str) -> Column:
@@ -150,12 +157,6 @@ def derive_date(ts: Column | str) -> Column:
 def derive_hour(ts: Column | str) -> Column:
     """Zero-padded hour string 00-23 — ingest_clickstream_to_s3.py:40."""
     return F.date_format(_col(ts), "HH")
-
-
-def fallback_proc_time(ts: Column | str) -> Column:
-    """Missing/unparseable event time -> processing time bucket —
-    ingest_clickstream_to_s3.py:44-51."""
-    return F.coalesce(_col(ts), F.current_timestamp())
 
 
 def parse_date_multi(s: Column | str) -> Column:

@@ -85,12 +85,6 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_prenormed(dot_ab: Column, norm_a: Column, norm_b: Column) -> Column:
-    """Cosine from precomputed pieces — compute norms once per row, not
-    once per pair, before a pairwise join."""
-    return dot_ab / (norm_a * norm_b)
-
-
 def _ns_dot_body(a: str, b: str) -> str:
     # list_sum over per-element products is bit-identical to
     # list_dot_product on clean doubles (probed: 0 mismatches in 20k

@@ -17,7 +17,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .session import apply_engine_confs, temp_confs
+from .memo import MEMO, file_key
+from .session import apply_engine_confs
+from .streaming.upsert import overwrite_partitions
 
 TABLES = (
     "region",
@@ -33,19 +35,11 @@ TABLES = (
 )
 
 
-# (session id, abs sf_dir, table, file identity) -> DataFrame. A
-# DataFrame is an immutable logical plan, so handing the same object to
-# every consumer is semantically free — what the cache saves is the
-# driver-side datasource resolution (file listing, footer/schema read)
-# that otherwise recurs once per query x table: ~0.1 s of fixed floor
-# per query in a 96-query run. File identity (mtime, size) keys out
-# staleness; the session id keys out stopped/restarted sessions.
-_DF_CACHE: dict[tuple, DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver testdata table as a DataFrame (cached per
-    session + file identity).
+    """Load one driver testdata table as a DataFrame, memoized per
+    application + file identity (``memo.file_key``): what the memo saves
+    is the driver-side datasource resolution (file listing, footer and
+    schema read) that otherwise recurs once per query x table.
 
     ``events.ts`` has shipped in two parquet physical types across
     driver testdata generations; normalize both to a session-TZ
@@ -61,29 +55,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     apply_engine_confs(spark)
     path = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
-    try:
-        st = os.stat(path)
-        # applicationId is unique per SparkContext — unlike id(spark),
-        # it cannot alias a new session onto a stopped one's entries
-        key = (spark.sparkContext.applicationId, path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = None
-    if key is not None and key in _DF_CACHE:
-        return _DF_CACHE[key]
-    df = spark.read.parquet(path)
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    if key is not None:
-        _DF_CACHE[key] = df
-    return df
 
+    def read() -> DataFrame:
+        df = spark.read.parquet(path)
+        if name == "events":
+            ts_type = dict(df.dtypes).get("ts")
+            if ts_type == "bigint":
+                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+            elif ts_type == "timestamp_ntz":
+                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        return df
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
+    return MEMO.get("table", file_key(spark, path), read)
 
 
 def write_jsonl_partitioned(
@@ -108,8 +91,9 @@ def write_jsonl_partitioned(
 
 
 def write_kpis_parquet(df: DataFrame, path: str, partition_col: str = "dt") -> None:
-    """KPI-zone sink: Parquet/snappy partitioned by run date, the
-    ``kpis/daily/dt=YYYY-MM-DD/kpis.parquet`` layout of daily_kpis.py:165-173.
+    """KPI-zone sink: Parquet (Spark's default snappy codec) partitioned
+    by run date, the ``kpis/daily/dt=YYYY-MM-DD/kpis.parquet`` layout of
+    daily_kpis.py:165-173.
 
     Overwrite is DYNAMIC (scoped to this write): the reference's day-run
     rewrites only ``kpis/daily/dt=<day>/`` — under the default static
@@ -117,12 +101,6 @@ def write_kpis_parquet(df: DataFrame, path: str, partition_col: str = "dt") -> N
     mirrored DAG's catchup backfill (16 concurrent day-runs,
     daily_kpis.py:187-188) would race full-zone overwrites and lose data.
     """
-    with temp_confs(
-        df.sparkSession, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-    ):
-        (
-            df.repartition(F.col(partition_col))
-            .write.partitionBy(partition_col)
-            .mode("overwrite")
-            .parquet(path, compression="snappy")
-        )
+    overwrite_partitions(
+        df.repartition(F.col(partition_col)), path, partition_col
+    )

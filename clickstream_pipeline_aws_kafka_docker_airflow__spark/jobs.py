@@ -26,6 +26,7 @@ from .session import temp_confs
 from .sources.jsonl import read_jsonl_drop_malformed
 from .streaming import healthcheck as hc
 from .streaming.ingest import start_ingest
+from .streaming.upsert import overwrite_partitions
 
 
 def _parse_date_any(s: str) -> dt.date | None:
@@ -225,15 +226,7 @@ def run_sketch_backfill(
     n_days = daily.count()
     if n_days == 0:
         return {"days_written": 0}
-    with temp_confs(
-        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-    ):
-        (
-            daily.repartition(1)
-            .write.partitionBy("dt")
-            .mode("overwrite")
-            .parquet(zone_path)
-        )
+    overwrite_partitions(daily.repartition(1), zone_path, "dt")
     return {"days_written": n_days}
 
 
@@ -471,6 +464,7 @@ def run_user_erasure(
         F.broadcast(del_df.select(user_col).distinct()), user_col, "left_anti"
     ).localCheckpoint()
     n_after = survivors.count()
+    # format-generic and keyed on several columns: not overwrite_partitions
     with temp_confs(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         (
             survivors.write.partitionBy(*partition_cols)

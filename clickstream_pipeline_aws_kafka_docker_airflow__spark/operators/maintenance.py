@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..session import temp_confs
+from ..streaming.upsert import overwrite_partitions
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 
@@ -82,13 +82,9 @@ def overwrite_day_partition(
     (daily_kpis.py:186-188), without rewriting the zone. The conf is
     scoped to this write — a shared session keeps its prior overwrite
     semantics."""
-    with temp_confs(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
-        (
-            kpis.repartition(F.col(partition_col))
-            .write.partitionBy(partition_col)
-            .mode("overwrite")
-            .parquet(kpi_path)
-        )
+    overwrite_partitions(
+        kpis.repartition(F.col(partition_col)), kpi_path, partition_col
+    )
 
 
 def vacuum_date_partitions(
@@ -149,11 +145,9 @@ def release_query_caches(spark: SparkSession) -> int:
     at each dataset boundary.
 
     Scope: clears Spark's CacheManager (the ``persist()`` pins) only.
-    Driver-side memo dicts (``projection._PCA_CACHE``,
-    ``rankstats._CUTS_CACHE``, ``similarity`` artifact state) are
-    intentionally NOT cleared: their keys embed the source-file
-    fingerprint (path+mtime+size), so a dataset switch misses rather
-    than poisons, and the entries are LRU-bounded small driver arrays.
+    The driver-side memo (``memo.MEMO``) is intentionally NOT cleared:
+    its keys embed the source-file identity (path+mtime+size), so a
+    dataset switch misses rather than poisons, and it is LRU-bounded.
     ``localCheckpoint`` blocks held by streaming zones are likewise
     out of scope — ``catalog.clearCache()`` does not release them
     (they are reclaimed by the zones' explicit release / GC path).

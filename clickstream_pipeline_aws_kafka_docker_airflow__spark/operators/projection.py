@@ -30,6 +30,8 @@ from functools import lru_cache
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from ..memo import MEMO, frame_key
+
 RP_K = 16  # output dims for the JL sketch
 RP_SEED = 1031
 PCA_K = 8
@@ -165,15 +167,6 @@ def gram_partials(emb: DataFrame, dim: int = _DIM, col: str = "embedding"):
     return emb.select(col).mapInPandas(_partial, schema)
 
 
-# fitted (comps, vals, mean) per (app, plan, data identity, params) —
-# the same bounded-memoized-collect pattern as the IVF/LSH state and
-# rankstats' cut cache: k x dim + dim doubles per entry, never
-# corpus-sized. Without it every pca_project8 call re-runs the Gram
-# collect (a full corpus scan) that the serve path doesn't need.
-_PCA_CACHE: dict = {}
-_PCA_CACHE_MAX = 16
-
-
 def pca_components(
     emb: DataFrame, k: int = PCA_K, dim: int = _DIM, col: str = "embedding"
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -181,27 +174,19 @@ def pca_components(
     (mean-centered Gram) via the distributed partial pass + driver
     ``eigh``. Deterministic orientation: each component's
     largest-|coordinate| entry is made positive (eigh sign is
-    otherwise arbitrary). Memoized per source-file identity (path +
-    mtime + size, the artifact_key identity); plans with un-stat-able
-    lineage never cache."""
-    key = None
-    try:
-        from .similarity import _source_fingerprint
+    otherwise arbitrary). Memoized per (``memo.frame_key``, k, dim,
+    col); plans with no stat-able file lineage are never memoized."""
+    key = frame_key(emb)
+    return MEMO.get(
+        "pca",
+        None if key is None else (*key, k, dim, col),
+        lambda: _fit_components(emb, k, dim, col),
+    )
 
-        fp = _source_fingerprint(emb)
-        if fp:
-            key = (
-                emb.sparkSession.sparkContext.applicationId,
-                emb.semanticHash(),
-                fp,
-                k,
-                dim,
-                col,
-            )
-    except Exception:
-        key = None
-    if key is not None and key in _PCA_CACHE:
-        return _PCA_CACHE[key]
+
+def _fit_components(
+    emb: DataFrame, k: int, dim: int, col: str
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     rows = gram_partials(emb, dim, col).collect()
     n = sum(r["n"] for r in rows)
     g = np.zeros((dim, dim))
@@ -219,15 +204,11 @@ def pca_components(
         if comps[i, j] < 0:
             comps[i] = -comps[i]
     result = (comps, vals[order], mean)
-    # freeze before caching: the cache hands out these SAME arrays by
+    # freeze before memoizing: the memo hands out these SAME arrays by
     # reference on every hit, so a caller mutating them in place would
     # silently poison all later hits — make that a loud ValueError
     for arr in result:
         arr.setflags(write=False)
-    if key is not None:
-        while len(_PCA_CACHE) >= _PCA_CACHE_MAX:
-            _PCA_CACHE.pop(next(iter(_PCA_CACHE)))
-        _PCA_CACHE[key] = result
     return result
 
 

@@ -39,23 +39,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.vectors import is_plain_name
+from ..memo import MEMO, frame_key
 
 _LOCAL_MASK = (1 << 33) - 1
-
-# memoized quartile-cut sets, keyed by (applicationId, plan semanticHash,
-# per-file (path, mtime, size) fingerprint, tiles, dim names, tie_break):
-# the cuts are a bounded data-derived artifact (<= dims x (tiles-1) rows),
-# exactly the class of collect the ANN operators memoize
-# (operators/similarity.py collect_query_vectors). File-identity in the
-# key means a rewritten parquet at the same path re-derives; frames with
-# no file lineage (createDataFrame tests) are never memoized.
-_CUTS_CACHE: dict = {}
-_CUTS_CACHE_MAX = 64
-
-
-def clear_cuts_cache() -> None:
-    """Drop every memoized cut set (test / invalidation hook)."""
-    _CUTS_CACHE.clear()
 
 def _ntile_from_rank(rank: Column, n: Column, tiles: int) -> Column:
     """Bucket id for 1-based ``rank`` of ``n`` rows, NTILE(tiles)
@@ -328,36 +314,37 @@ def ntile_cuts_multi(
     n_part = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
+    base = frame_key(df if fingerprint_frame is None else fingerprint_frame)
     key = None
-    try:
-        from .similarity import _source_fingerprint
-
-        fp = _source_fingerprint(
-            df if fingerprint_frame is None else fingerprint_frame
+    if base is not None:
+        # Key the dim expressions SEMANTICALLY, not by display name:
+        # two calls with identical names but different key Columns
+        # (a sign flip, a different coalesce sentinel) must not
+        # collide on stale cuts. select().semanticHash() canonicalizes
+        # the analyzed expressions without running a job.
+        key = (
+            *base,
+            df.semanticHash(),
+            tiles,
+            tuple(name for name, _ in dims),
+            df.select(
+                *[k.alias(f"_k{i}") for i, (_, k) in enumerate(dims)]
+            ).semanticHash(),
+            tie_break,
+            n_part,
         )
-        if fp:  # empty/None lineage (e.g. createDataFrame): never memoize
-            # Key the dim expressions SEMANTICALLY, not by display name:
-            # two calls with identical names but different key Columns
-            # (a sign flip, a different coalesce sentinel) must not
-            # collide on stale cuts. select().semanticHash() canonicalizes
-            # the analyzed expressions without running a job.
-            key = (
-                spark.sparkContext.applicationId,
-                df.semanticHash(),
-                fp,
-                tiles,
-                tuple(name for name, _ in dims),
-                df.select(
-                    *[k.alias(f"_k{i}") for i, (_, k) in enumerate(dims)]
-                ).semanticHash(),
-                tie_break,
-                n_part,
-            )
-    except Exception:
-        key = None
-    if key is not None and key in _CUTS_CACHE:
-        return _CUTS_CACHE[key]
+    return MEMO.get(
+        "cuts", key, lambda: _derive_cuts(df, tiles, dims, tie_break, n_part)
+    )
 
+
+def _derive_cuts(
+    df: DataFrame,
+    tiles: int,
+    dims: list[tuple[str, Column]],
+    tie_break: str,
+    n_part: int,
+) -> list[list[tuple[float, object]]]:
     # try/finally: the persist pins monotonically_increasing_id between
     # the counts job and the _mid-keyed filter; release it on EVERY exit
     # (fully consumed — cuts are driver literals — unlike the exact_ntile
@@ -399,14 +386,9 @@ def ntile_cuts_multi(
         }
     finally:
         ranged.unpersist()
-    cuts = [
+    return [
         [by_mid[mid_of(d * n + b)] for b in bs] for d in range(len(dims))
     ]
-    if key is not None:
-        while len(_CUTS_CACHE) >= _CUTS_CACHE_MAX:
-            _CUTS_CACHE.pop(next(iter(_CUTS_CACHE)))
-        _CUTS_CACHE[key] = cuts
-    return cuts
 
 
 def exact_ntile_broadcast(
@@ -435,12 +417,15 @@ def exact_ntile_broadcast(
         df, tiles, dims, tie_break, num_partitions, fingerprint_frame
     )
     out = df
+    # the fast path's temp column must never shadow (and then drop) a
+    # caller column; Spark resolves names case-insensitively
+    taken = {c.lower() for c in df.columns} | {n.lower() for n, _ in dims}
     for (name, key), dim_cuts in zip(dims, cuts):
         # single-parse SQL fast path (r12, the fold_dot_sql lesson):
         # the per-cut Column-DSL comparison ladder cost ~12 py4j
         # round-trips per cut — tiles x dims of them per build. When
         # every cut composite renders to an exact SQL literal and the
-        # tie-break is a plain identifier, the whole ladder is ONE
+        # dim name and tie-break are plain identifiers, the ladder is ONE
         # parse; otherwise the DSL twin below runs (pinned equivalent
         # by tests/test_plans_rankstats.py::
         # test_broadcast_sql_ladder_matches_dsl).
@@ -448,10 +433,14 @@ def exact_ntile_broadcast(
             (_double_literal_sql(ck), _tb_literal_sql(ctb))
             for ck, ctb in dim_cuts
         ]
-        if is_plain_name(tie_break) and all(
-            a is not None and b is not None for a, b in lits
+        if (
+            is_plain_name(name)
+            and is_plain_name(tie_break)
+            and all(a is not None and b is not None for a, b in lits)
         ):
             tmp = f"_k_{name}"
+            while tmp.lower() in taken:
+                tmp = f"_{tmp}"
             terms = " + ".join(
                 f"(CASE WHEN {a} < `{tmp}` OR ({a} = `{tmp}`"
                 f" AND {b} < `{tie_break}`) THEN 1 ELSE 0 END)"

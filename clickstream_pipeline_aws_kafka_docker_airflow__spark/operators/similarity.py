@@ -24,6 +24,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.vectors import dot
+from ..memo import MEMO, frame_key
 
 
 def _fold_sq(coords: list[float]) -> float:
@@ -34,47 +35,6 @@ def _fold_sq(coords: list[float]) -> float:
     for x in coords:
         acc = acc + x * x
     return acc
-
-
-_QV_CACHE: dict[tuple, list[tuple[int, list[float]]]] = {}
-_QV_CACHE_MAX = 32
-
-
-def _source_fingerprint(df: "DataFrame") -> tuple | None:
-    """Identity of the DATA behind a plan, not just the plan.
-
-    ``semanticHash`` covers the logical plan (source path + projection)
-    but not the bytes at that path — parquet rewritten in place within
-    one Spark application would otherwise serve stale cached vectors.
-    Fold in (path, mtime_ns, size) per input file, the same identity
-    ``artifacts.artifact_key`` uses for on-disk artifacts.
-
-    ``inputFiles`` yields Hadoop-style URIs (``file:/p``,
-    ``file:///p``, ``s3a://b/p``); only local files are stat-able.
-    Returns None — meaning DON'T CACHE — if any file cannot be
-    stat'ed: a constant sentinel there would make two different
-    snapshots fingerprint-equal, which is exactly the staleness this
-    key exists to prevent."""
-    import os
-    from urllib.parse import urlparse
-
-    out = []
-    for f in sorted(df.inputFiles()):
-        u = urlparse(f)
-        if u.scheme not in ("", "file"):
-            return None  # remote store: no local identity to key on
-        p = u.path or f
-        try:
-            st = os.stat(p)
-        except OSError:
-            return None
-        out.append((p, st.st_mtime_ns, st.st_size))
-    return tuple(out)
-
-
-def clear_query_vector_cache() -> None:
-    """Drop every cached query-vector slice (test / invalidation hook)."""
-    _QV_CACHE.clear()
 
 
 def collect_query_vectors(
@@ -88,43 +48,24 @@ def collect_query_vectors(
     is exact, so downstream driver-side folds see the same values the
     in-plan expressions would.
 
-    Cached per (application, plan identity, source-file identity, n):
-    seven ANN/similarity queries collect the same bounded slice —
-    re-running the scan job per query is pure fixed cost.
-    ``semanticHash`` keys on the logical plan (source path +
-    projection); ``_source_fingerprint`` adds per-file (mtime, size) so
-    parquet rewritten at the same path invalidates; the applicationId
-    guard keeps a restarted session from serving a stopped context's
-    rows. Bounded FIFO (``_QV_CACHE_MAX``) for long-lived sessions."""
-    try:
-        fp = _source_fingerprint(emb)
-        key = (
-            (
-                emb.sparkSession.sparkContext.applicationId,
-                emb.semanticHash(),
-                fp,
-                n_queries,
+    Memoized per (``memo.frame_key``, n): seven ANN/similarity queries
+    collect the same bounded slice — re-running the scan job per query
+    is pure fixed cost."""
+
+    def collect() -> list[tuple[int, list[float]]]:
+        return sorted(
+            (int(r["vec_id"]), [float(x) for x in r["v"]])
+            for r in emb.where(F.col("vec_id") < n_queries)
+            .select(
+                "vec_id", F.col("embedding").cast("array<double>").alias("v")
             )
-            if fp is not None
-            else None
+            .collect()
         )
-    except Exception:
-        key = None
-    if key is not None and key in _QV_CACHE:
-        return _QV_CACHE[key]
-    out = sorted(
-        (int(r["vec_id"]), [float(x) for x in r["v"]])
-        for r in emb.where(F.col("vec_id") < n_queries)
-        .select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-        .collect()
+
+    key = frame_key(emb)
+    return MEMO.get(
+        "query_vectors", None if key is None else (*key, n_queries), collect
     )
-    if key is not None:
-        while len(_QV_CACHE) >= _QV_CACHE_MAX:
-            _QV_CACHE.pop(next(iter(_QV_CACHE)))
-        _QV_CACHE[key] = out
-    return out
 
 
 def _probe_cells_driver(
@@ -459,62 +400,6 @@ def kmeans_centroid_list(
             for cid, coords in by_cid.items()
         )
     return cents
-
-
-def kmeans_centroids(
-    emb: DataFrame,
-    n_centroids: int = IVF_NCENTROIDS,
-    n_iters: int = IVF_KMEANS_ITERS,
-) -> DataFrame:
-    """DataFrame view of :func:`kmeans_centroid_list` (API surface for
-    callers that join rather than inline)."""
-    return emb.sparkSession.createDataFrame(
-        kmeans_centroid_list(emb, n_centroids, n_iters),
-        "centroid_id bigint, cvec array<double>",
-    )
-
-
-def save_quantizer(
-    cents: list[tuple[int, list[float]]], spark, path: str
-) -> None:
-    """Persist a trained coarse quantizer — the 100 TB usage pattern is
-    train-once-on-a-sample, then reuse across every search/assignment
-    job (retraining per query in the benched queries is a harness
-    artifact; this is the production path)."""
-    spark.createDataFrame(
-        [(cid, coords) for cid, coords in cents],
-        "centroid_id bigint, cvec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_quantizer(spark, path: str) -> list[tuple[int, list[float]]]:
-    """Inverse of :func:`save_quantizer`; float64 round-trips through
-    parquet exactly, so a loaded quantizer reproduces assignments
-    bit-for-bit. Memoized per (application, path, _SUCCESS mtime):
-    every IVF-family query loads the same few-hundred-row table — one
-    collect job per snapshot, not one per query."""
-    import os
-
-    try:
-        st = os.stat(os.path.join(path, "_SUCCESS"))
-        key = (
-            spark.sparkContext.applicationId,
-            os.path.abspath(path),
-            st.st_mtime_ns,
-        )
-    except OSError:
-        key = None
-    if key is not None and key in _QV_CACHE:
-        return _QV_CACHE[key]
-    out = sorted(
-        (r["centroid_id"], [float(x) for x in r["cvec"]])
-        for r in spark.read.parquet(path).collect()
-    )
-    if key is not None:
-        while len(_QV_CACHE) >= _QV_CACHE_MAX:
-            _QV_CACHE.pop(next(iter(_QV_CACHE)))
-        _QV_CACHE[key] = out
-    return out
 
 
 def ivf_assignments(

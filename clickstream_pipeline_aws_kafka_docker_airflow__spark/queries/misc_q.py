@@ -7,7 +7,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from ..functions.scalars import dec_sum_round2
+from ..functions.scalars import KNOWN_EVENT_TYPES, dec_sum_round2
 from ..io import load_table
 from ..operators.rangejoin import range_join_bucketed
 from ..registry import register
@@ -676,7 +676,6 @@ EXPECTATIONS = (
     ("events_known_type", "events"),
     ("documents_nchars_consistent", "documents"),
 )
-KNOWN_EVENT_TYPES = ("view", "click", "purchase", "signup", "error")
 
 
 @register(

@@ -421,43 +421,51 @@ def _res_params() -> str:
 
 def _res_books_cached(spark, sf_dir):
     """Train-once residual codebooks (the train_pq(residual_frame)
-    seed collect), persisted like _quantizer_cached: the seed slice of
-    the residual frame is a COLLECT over a three-way join, and its
-    query-vector cache key (plan semanticHash) is not stable across
-    invocations of the joined plan — so without this memo every warm
-    serve re-ran the collect (~3 fixed-cost jobs). Keyed on the source
-    file identity + quantizer/PQ params; JSON round-trips float64
-    exactly, so a loaded codebook reproduces LUTs (and the oracle
-    match) bit-for-bit."""
-    import hashlib
-    import json
+    seed collect), a materialized artifact like _quantizer_cached: the
+    seed slice of the residual frame is a COLLECT over a three-way
+    join, and its query-vector memo key (plan semanticHash) is not
+    stable across invocations of the joined plan — so without this
+    every warm serve re-ran the collect (~3 fixed-cost jobs). Keyed on
+    the source file identity + quantizer/PQ params; float64 round-trips
+    parquet exactly, so a read-back codebook reproduces LUTs (and the
+    oracle match) bit-for-bit."""
     import os
 
+    from ..memo import MEMO, frame_key
+    from ..operators.artifacts import materialized
     from ..operators.pq import residual_frame, train_pq
     from .similarity_q import _quantizer_cached, ivf_cells_table
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    key = hashlib.sha1(
-        f"{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}:"
-        f"{_res_params()}:books1".encode()
-    ).hexdigest()[:16]
-    path = os.path.join("/tmp/spark_graft_quantizers", f"pqres_books_{key}.json")
-    if os.path.exists(path):
-        with open(path) as f:
-            return [
-                [(int(cid), [float(x) for x in v]) for cid, v in book]
-                for book in json.load(f)
-            ]
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = _quantizer_cached(spark, sf_dir)
-    books = train_pq(residual_frame(emb, ivf_cells_table(spark, sf_dir), cents))
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(books, f)
-    os.replace(tmp, path)
-    return books
+    def _build():
+        emb = load_table(spark, sf_dir, "embeddings")
+        cents = _quantizer_cached(spark, sf_dir)
+        books = train_pq(
+            residual_frame(emb, ivf_cells_table(spark, sf_dir), cents)
+        )
+        return spark.createDataFrame(
+            [
+                (s, pos, cid, coords)
+                for s, book in enumerate(books)
+                for pos, (cid, coords) in enumerate(book)
+            ],
+            "sub int, pos int, cid bigint, v array<double>",
+        ).coalesce(1)
+
+    table = materialized(
+        spark,
+        os.path.join(sf_dir, "embeddings.parquet"),
+        "pq_res_books",
+        _build,
+        params=_res_params(),
+    )
+
+    def decode():
+        books = [[] for _ in range(N_SUB)]
+        for r in sorted(table.collect(), key=lambda r: (r["sub"], r["pos"])):
+            books[r["sub"]].append((r["cid"], [float(x) for x in r["v"]]))
+        return books
+
+    return MEMO.get("pq_books", frame_key(table), decode)
 
 
 def pq_res_codes_table(spark, sf_dir):

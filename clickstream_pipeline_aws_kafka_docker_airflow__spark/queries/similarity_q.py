@@ -204,48 +204,41 @@ WHERE rn <= {ANN_K}
 
 def _quantizer_cached(spark, sf_dir):
     """Train-once-reuse-everywhere quantizer: the trained centroid set
-    is persisted (save_quantizer) keyed on the source file identity and
-    quantizer params, and later calls load it instead of re-running
+    is a materialized artifact keyed on the source file identity and
+    quantizer params, and later calls read it instead of re-running
     k-means — the production IVF pattern, where training cost lives in
-    a build job and the query path only loads. float64 round-trips
-    through parquet exactly, so a loaded quantizer reproduces
+    a build job and the query path only reads. float64 round-trips
+    through parquet exactly, so a read-back quantizer reproduces
     assignments (and the oracle match) bit-for-bit."""
-    import hashlib
     import os
 
-    from ..operators.similarity import (
-        kmeans_centroid_list,
-        load_quantizer,
-        save_quantizer,
+    from ..memo import MEMO, frame_key
+    from ..operators.artifacts import materialized
+    from ..operators.similarity import kmeans_centroid_list
+
+    table = materialized(
+        spark,
+        os.path.join(sf_dir, "embeddings.parquet"),
+        "quantizer",
+        lambda: spark.createDataFrame(
+            kmeans_centroid_list(load_table(spark, sf_dir, "embeddings")),
+            "centroid_id bigint, cvec array<double>",
+        ).coalesce(1),
+        params=f"{IVF_NCENTROIDS}i{IVF_KMEANS_ITERS}",
     )
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    key = hashlib.sha1(
-        f"{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}:"
-        f"{IVF_NCENTROIDS}:{IVF_KMEANS_ITERS}:v1".encode()
-    ).hexdigest()[:16]
-    path = os.path.join("/tmp/spark_graft_quantizers", key)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return load_quantizer(spark, path)
-    import time
-
-    from ..operators.artifacts import BUILD_WALLS
-
-    t0 = time.perf_counter()
-    cents = kmeans_centroid_list(load_table(spark, sf_dir, "embeddings"))
-    save_quantizer(cents, spark, path)
-    # k-means training is a build cost like any artifact's — recorded
-    # so bench_compare's cold pass can report build-inclusive walls
-    BUILD_WALLS["quantizer"] = BUILD_WALLS.get("quantizer", 0.0) + (
-        time.perf_counter() - t0
+    return MEMO.get(
+        "quantizer",
+        frame_key(table),
+        lambda: sorted(
+            (r["centroid_id"], [float(x) for x in r["cvec"]])
+            for r in table.collect()
+        ),
     )
-    return cents
 
 
 def ivf_cells_table(spark, sf_dir, cents=None):
     """Materialized IVF inverted file: every vector's home cell under
-    the persisted quantizer — built once per snapshot, joined by every
+    the materialized quantizer — built once per snapshot, joined by every
     search."""
     import os
 

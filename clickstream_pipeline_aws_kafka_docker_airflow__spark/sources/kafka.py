@@ -143,22 +143,6 @@ def to_kafka_payload(df: DataFrame, keep_null_fields: bool = True) -> DataFrame:
     return df.select(F.to_json(F.struct(*df.columns), opts).alias("value"))
 
 
-def write_kafka_stream(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str = DEFAULT_TOPIC,
-    checkpoint_dir: str = "/tmp/ckpt-kafka-sink",
-):
-    """Returns an un-started DataStreamWriter for the Kafka sink."""
-    return (
-        to_kafka_payload(df)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-
-
 def kafka_connector_available(spark: SparkSession) -> bool:
     """True when the spark-sql-kafka connector is on this session's
     classpath. The test env ships no connector jar (the recorded-

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..queries.misc_q import KNOWN_EVENT_TYPES
+from ..functions.scalars import KNOWN_EVENT_TYPES
 from .upsert import overwrite_partitions
 
 

@@ -1023,13 +1023,10 @@ def probe_users(spark) -> dict:
         # composites on the driver — prove that state is dims x
         # (tiles-1), flat in n_users (the collect that could have been
         # data-sized is the per-partition counts, n_part rows).
-        from clickstream_pipeline_aws_kafka_docker_airflow__spark.operators import (
-            rankstats,
-        )
+        from clickstream_pipeline_aws_kafka_docker_airflow__spark.memo import MEMO
 
         per_entry = [
-            sum(len(dim) for dim in cuts)
-            for cuts in rankstats._CUTS_CACHE.values()
+            sum(len(dim) for dim in cuts) for cuts in MEMO.entries("cuts")
         ]
         row["rfm_cut_driver_state"] = {
             "memo_entries": len(per_entry),

@@ -76,24 +76,38 @@ def test_ann_recall_vs_bruteforce(spark):
     assert r_ref >= r_raw - REFINE_TOLERANCE
 
 
-def test_quantizer_persists_and_reproduces(spark, tmp_path):
-    """Train-once-reuse-everywhere: a saved+loaded quantizer must give
-    bit-identical search results to the freshly trained one (float64
-    round-trips parquet exactly), skipping the training jobs."""
+def test_quantizer_persists_and_reproduces(spark, tmp_path, monkeypatch):
+    """Train-once-reuse-everywhere: the quantizer artifact read back
+    from parquet equals the freshly trained centroids bit for bit
+    (float64 round-trips parquet exactly), gives identical search
+    results, and its build writes only under ARTIFACT_ROOT."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
     from clickstream_pipeline_aws_kafka_docker_airflow__spark.io import load_table
+    from clickstream_pipeline_aws_kafka_docker_airflow__spark.operators import artifacts
     from clickstream_pipeline_aws_kafka_docker_airflow__spark.operators.similarity import (
         ivf_topk,
         kmeans_centroid_list,
-        load_quantizer,
-        save_quantizer,
+    )
+    from clickstream_pipeline_aws_kafka_docker_airflow__spark.queries.similarity_q import (
+        _quantizer_cached,
     )
 
+    root = str(tmp_path / "artifacts")
+    monkeypatch.setattr(artifacts, "ARTIFACT_ROOT", root)
+    written, parquet = [], DataFrameWriter.parquet
+
+    def record(self, path, *a, **kw):
+        written.append(path)
+        return parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", record)
     emb = load_table(spark, SF_DIR, "embeddings")
-    cents = kmeans_centroid_list(emb)
-    path = str(tmp_path / "quantizer")
-    save_quantizer(cents, spark, path)
-    loaded = load_quantizer(spark, path)
-    assert loaded == cents
+    loaded = _quantizer_cached(spark, SF_DIR)
+    assert written and all(p.startswith(root + os.sep) for p in written), written
+    assert loaded == kmeans_centroid_list(emb)
     fresh = {
         (r["qid"], r["nid"], r["sim"])
         for r in ivf_topk(emb, 10, 5).collect()

@@ -54,7 +54,7 @@ ALLOWED: dict[tuple[str, str], tuple[int, str]] = {
         1,
         "same pin as exact_ntile, one frame per call (library API)",
     ),
-    ("operators/rankstats.py", "ntile_cuts_multi"): (
+    ("operators/rankstats.py", "_derive_cuts"): (
         1,
         "TRANSIENT: released in try/finally within the call; "
         "derivation-internal only",

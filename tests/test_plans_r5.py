@@ -8,9 +8,27 @@ the exact-rescore norm runs on post-join survivors only."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
+import pytest
+from pyspark.sql import functions as F
+
 from clickstream_pipeline_aws_kafka_docker_airflow__spark import registry
+from clickstream_pipeline_aws_kafka_docker_airflow__spark.io import load_table
+from clickstream_pipeline_aws_kafka_docker_airflow__spark.memo import MEMO
+from clickstream_pipeline_aws_kafka_docker_airflow__spark.operators import (
+    artifacts,
+    projection,
+    rankstats,
+    similarity,
+)
 from clickstream_pipeline_aws_kafka_docker_airflow__spark.plans.explain import (
     plan_facts,
+)
+from clickstream_pipeline_aws_kafka_docker_airflow__spark.queries import (
+    pq_q,
+    similarity_q,
 )
 
 from conftest import SF_SMOKE
@@ -65,79 +83,130 @@ def test_repetition_score_is_shuffle_free(spark):
 
 
 def test_query_vector_slice_collected_once_per_plan(spark):
-    """collect_query_vectors memoizes per (application, plan, n): two
-    calls against the same corpus DataFrame must hit the cache (one
-    Spark job, not two)."""
-    from clickstream_pipeline_aws_kafka_docker_airflow__spark.io import (
-        load_table,
-    )
-    from clickstream_pipeline_aws_kafka_docker_airflow__spark.operators.similarity import (
-        _QV_CACHE,
-        collect_query_vectors,
-    )
-
+    """collect_query_vectors memoizes per (application, plan, data, n):
+    two calls against the same corpus must hit the memo (no second
+    Spark job)."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    first = collect_query_vectors(emb, 5)
+    first = similarity.collect_query_vectors(emb, 5)
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or [])
-    again = collect_query_vectors(load_table(spark, SF_SMOKE, "embeddings"), 5)
+    hits = MEMO.hits["query_vectors"]
+    again = similarity.collect_query_vectors(
+        load_table(spark, SF_SMOKE, "embeddings"), 5
+    )
     after = len(tracker.getJobIdsForGroup(None) or [])
     assert again == first
     assert after == before, "cache miss ran a Spark job"
-    assert any(k[-1] == 5 for k in _QV_CACHE), "slice not memoized"
+    assert MEMO.hits["query_vectors"] == hits + 1, "slice not memoized"
 
 
 def test_query_vector_cache_invalidates_on_rewrite(spark, tmp_path):
     """Rewriting the parquet at the SAME path within one application
-    must not serve stale vectors: the cache key folds in per-file
-    (mtime_ns, size), so a rewrite is a different key (r5 advisor)."""
-    import shutil as _sh
-
-    from clickstream_pipeline_aws_kafka_docker_airflow__spark.io import (
-        load_table,
-    )
-    from clickstream_pipeline_aws_kafka_docker_airflow__spark.operators.similarity import (
-        _QV_CACHE,
-        clear_query_vector_cache,
-        collect_query_vectors,
-    )
-
+    must not serve stale vectors: the key folds in per-file
+    (mtime_ns, size), so a rewrite is a different key."""
     src = f"{SF_SMOKE}/embeddings.parquet"
     dst = str(tmp_path / "embeddings.parquet")
-    _sh.copytree(src, dst) if __import__("os").path.isdir(src) else _sh.copy(
-        src, dst
-    )
-    clear_query_vector_cache()
-    first = collect_query_vectors(spark.read.parquet(dst), 3)
-    n_keys = len(_QV_CACHE)
+    (shutil.copytree if os.path.isdir(src) else shutil.copy)(src, dst)
+    first = similarity.collect_query_vectors(spark.read.parquet(dst), 3)
+    misses = MEMO.misses["query_vectors"]
 
     # rewrite in place: drop the first vector so the slice changes
-    rewritten = (
-        spark.read.parquet(dst).where("vec_id >= 1").toPandas()
-    )
-    import pandas as pd  # noqa: F401
-
+    rewritten = spark.read.parquet(dst).where("vec_id >= 1").toPandas()
     spark.createDataFrame(rewritten).write.mode("overwrite").parquet(dst)
 
-    second = collect_query_vectors(spark.read.parquet(dst), 3)
-    assert len(_QV_CACHE) > n_keys, "rewrite did not change the cache key"
+    second = similarity.collect_query_vectors(spark.read.parquet(dst), 3)
+    assert MEMO.misses["query_vectors"] == misses + 1, (
+        "rewrite did not change the memo key"
+    )
     assert [i for i, _ in second] == [1, 2], second
     assert [i for i, _ in first] == [0, 1, 2], first
-    clear_query_vector_cache()
 
 
-def test_query_vector_cache_is_bounded(spark):
-    """FIFO bound: the cache never grows past _QV_CACHE_MAX entries."""
-    from clickstream_pipeline_aws_kafka_docker_airflow__spark.io import (
-        load_table,
-    )
-    from clickstream_pipeline_aws_kafka_docker_airflow__spark.operators import (
-        similarity as sim,
-    )
-
-    sim.clear_query_vector_cache()
+def test_query_vector_cache_is_bounded(spark, monkeypatch):
+    """LRU bound: the memo never grows past its capacity, however many
+    distinct slices are collected."""
+    monkeypatch.setattr(MEMO, "capacity", 4)
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    for n in range(1, sim._QV_CACHE_MAX + 5):
-        sim.collect_query_vectors(emb, n)
-    assert len(sim._QV_CACHE) <= sim._QV_CACHE_MAX
-    sim.clear_query_vector_cache()
+    for n in range(1, MEMO.capacity + 5):
+        similarity.collect_query_vectors(emb, n)
+    assert len(MEMO) <= MEMO.capacity
+    assert len(MEMO.entries("query_vectors")) <= MEMO.capacity
+
+
+def _emb(spark, d):
+    # memoized itself: a fresh read would run a footer/schema job
+    return load_table(spark, d, "embeddings")
+
+
+def _cuts(df):
+    dims = [("q", F.col("vec_id").cast("double"))]
+    return rankstats.ntile_cuts_multi(df, 4, dims, "vec_id")
+
+
+# memo kind -> (call(spark, sf_dir), call on a frame with no file
+# lineage, or None where the site is keyed on a path)
+_MEMO_SITES = {
+    "table": (_emb, None),
+    "artifact": (
+        lambda spark, d: artifacts.materialized(
+            spark, f"{d}/embeddings.parquet", "memo_probe",
+            lambda: _emb(spark, d).select("vec_id"),
+        ),
+        None,
+    ),
+    "query_vectors": (
+        lambda spark, d: similarity.collect_query_vectors(_emb(spark, d), 3),
+        lambda df: similarity.collect_query_vectors(df, 3),
+    ),
+    "pca": (
+        lambda spark, d: projection.pca_components(_emb(spark, d)),
+        projection.pca_components,
+    ),
+    "cuts": (lambda spark, d: _cuts(_emb(spark, d)), _cuts),
+    "quantizer": (similarity_q._quantizer_cached, None),
+    "pq_books": (pq_q._res_books_cached, None),
+}
+
+
+@pytest.mark.parametrize("kind", list(_MEMO_SITES))
+def test_memo_site_hits_invalidates_and_stays_bounded(
+    spark, tmp_path, monkeypatch, kind
+):
+    """Every memo call site: a second call is a hit that runs no Spark
+    job; a parquet rewritten in place at the same path misses; the
+    store never holds more than its capacity; and a frame with no file
+    lineage is never memoized."""
+    call, call_unkeyed = _MEMO_SITES[kind]
+    monkeypatch.setattr(artifacts, "ARTIFACT_ROOT", str(tmp_path / "artifacts"))
+    monkeypatch.setattr(MEMO, "capacity", 4)
+    d = str(tmp_path / "sf")
+    shutil.copytree(SF_SMOKE, d)
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs():
+        return len(tracker.getJobIdsForGroup(None) or [])
+
+    first = call(spark, d)
+    hits, misses, n_jobs = MEMO.hits[kind], MEMO.misses[kind], jobs()
+    again = call(spark, d)
+    assert again is first
+    assert (MEMO.hits[kind], MEMO.misses[kind]) == (hits + 1, misses)
+    assert jobs() == n_jobs, "memo hit ran a Spark job"
+
+    # rewrite in place: same path, one vector fewer
+    path = f"{d}/embeddings.parquet"
+    kept = spark.read.parquet(path).where("vec_id >= 1").toPandas()
+    spark.createDataFrame(kept).write.mode("overwrite").parquet(path)
+    call(spark, d)
+    assert MEMO.misses[kind] == misses + 1, "rewrite served the stale entry"
+    assert len(MEMO) <= MEMO.capacity
+
+    if call_unkeyed is not None:
+        local = spark.createDataFrame(kept)
+        n_entries = len(MEMO.entries(kind))
+        call_unkeyed(local)
+        call_unkeyed(local)
+        assert MEMO.misses[kind] == misses + 3
+        assert len(MEMO.entries(kind)) == n_entries
+
+

@@ -186,6 +186,24 @@ def test_broadcast_sql_ladder_matches_dsl(spark, monkeypatch):
     assert fast == slow and len(fast) == 203
 
 
+def test_broadcast_ntile_keeps_caller_temp_named_column(spark):
+    """A caller column named like the fast path's temp column
+    (``_k_<name>``) must come out unchanged, and the buckets must be
+    the ones computed without it."""
+    df = _frame(spark, 57, seed=3)
+    dims = [("a_q", F.col("v").cast("double")), ("b_q", -F.col("w").cast("double"))]
+    plain = {
+        r["id"]: (r["a_q"], r["b_q"])
+        for r in exact_ntile_broadcast(df.fillna(0, ["v"]), 4, dims, "id").collect()
+    }
+    clash = df.fillna(0, ["v"]).withColumn("_k_a_q", F.col("id") * 10)
+    out = exact_ntile_broadcast(clash, 4, dims, "id")
+    assert "_k_a_q" in out.columns
+    rows = out.collect()
+    assert all(r["_k_a_q"] == r["id"] * 10 for r in rows)
+    assert {r["id"]: (r["a_q"], r["b_q"]) for r in rows} == plain
+
+
 def test_rfm_segments_plan_has_no_window(spark):
     """The point of the rewrites: the FINAL rfm plan must contain NO
     WindowExec (the r7 plan's three unpartitioned ntile windows were a

@@ -106,3 +106,33 @@ def test_gate_replay_is_idempotent(spark, tmp_path):
     stream = spark.readStream.schema(_SCHEMA).parquet(src)
     start_quality_gate(stream, gate, ck2).awaitTermination(120)
     assert snap() == first
+
+
+def test_gate_admits_reference_shaped_events(spark, tmp_path):
+    """The reference producer's event types (page_view, add_to_cart,
+    checkout, purchase; price only on purchases) are all known: a
+    generated batch lands wholly in the accepted zone."""
+    from clickstream_pipeline_aws_kafka_docker_airflow__spark.sources.generator import (
+        EVENT_TYPES,
+        generate_events_batch_deterministic,
+    )
+
+    src = str(tmp_path / "src")
+    gate = str(tmp_path / "gate")
+    events = generate_events_batch_deterministic(spark, 500, days=1).select(
+        F.monotonically_increasing_id().alias("event_id"),
+        F.to_timestamp("event_ts").alias("ts"),
+        "user_id",
+        "event_type",
+        F.col("price").cast("double").alias("value"),
+    )
+    events.repartition(1).write.parquet(src)
+    types = [r.event_type for r in spark.read.parquet(src).collect()]
+    assert set(types) == set(EVENT_TYPES)
+    stream = spark.readStream.schema(_SCHEMA).parquet(src)
+    start_quality_gate(stream, gate, str(tmp_path / "ck")).awaitTermination(120)
+    assert spark.read.parquet(accepted_zone(gate)).count() == len(types)
+    n_quarantined = sum(
+        r.n_violations for r in spark.read.parquet(metrics_zone(gate)).collect()
+    )
+    assert n_quarantined == 0
