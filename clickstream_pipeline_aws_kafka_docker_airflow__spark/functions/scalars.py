@@ -23,6 +23,27 @@ KNOWN_EVENT_TYPES = (
 )
 
 
+def event_checks() -> dict[str, tuple[Column, Column | None]]:
+    """The event-row expectations the streaming quality gate and the
+    batch ``expectations_audit`` share: check name -> (VIOLATION
+    predicate, true == row fails; CHECKED-population predicate, the
+    rate's denominator, None == every row)."""
+    purchase = F.col("event_type") == "purchase"
+    return {
+        # NULL is a violation too: bare ~isin() is NULL for NULL input,
+        # which when() treats as false
+        "known_type": (
+            F.col("event_type").isNull()
+            | ~F.col("event_type").isin(*KNOWN_EVENT_TYPES),
+            None,
+        ),
+        "purchase_value_positive": (
+            purchase & (F.col("value").isNull() | (F.col("value") <= 0)),
+            purchase,
+        ),
+    }
+
+
 def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 

@@ -7,7 +7,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from ..functions.scalars import KNOWN_EVENT_TYPES, dec_sum_round2
+from ..functions.scalars import KNOWN_EVENT_TYPES, dec_sum_round2, event_checks
 from ..io import load_table
 from ..operators.rangejoin import range_join_bucketed
 from ..registry import register
@@ -455,12 +455,12 @@ def med2_from_hist(h, val):
     (2x middle) and even (sum of the two middles) group sizes.
 
     Spelled as TWO selectExpr parses (r12, the fold_dot_sql lesson):
-    the Column-DSL twin (kept below as the plan-equivalence anchor)
-    cost ~0.3 s of py4j round-trips per call and this runs twice per
-    build. Both window frames share one partitioning AND ordering so
-    they ride one WindowExec sort pass instead of two exchanges —
-    identical analyzed plan, pinned by
-    tests/test_hist_median.py::test_med2_sql_spelling_matches_dsl."""
+    the Column-DSL spelling it replaced cost ~0.3 s of py4j round-trips
+    per call, and this runs twice per build. Both window frames share
+    one partitioning AND ordering so they ride one WindowExec sort pass
+    instead of two exchanges. The references are the ``mad_outliers``
+    DuckDB oracle and the sorted-median property test in
+    tests/test_hist_median.py."""
     over = f"OVER (PARTITION BY event_type ORDER BY {val}"
     r = h.selectExpr(
         "*",
@@ -478,29 +478,6 @@ def med2_from_hist(h, val):
     )
     return r.groupBy("event_type").agg(
         F.expr(f"CAST(sum({pick}) AS BIGINT)").alias("med2")
-    )
-
-
-def med2_from_hist_dsl(h, val):
-    """Column-DSL twin of :func:`med2_from_hist` — the r9-r11 spelling,
-    kept as the equivalence anchor the plan test compares against."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy(val)
-    wn = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    r = (
-        h.withColumn("_hi", F.sum("k").over(w))
-        .withColumn("_lo", F.col("_hi") - F.col("k") + 1)
-        .withColumn("_n", F.sum("k").over(wn))
-    )
-    m1 = F.expr("(_n + 1) div 2")
-    m2 = F.expr("_n div 2 + 1")
-    covers = lambda m: (F.col("_lo") <= m) & (m <= F.col("_hi"))  # noqa: E731
-    pick = F.col(val) * (
-        covers(m1).cast("bigint") + covers(m2).cast("bigint")
-    )
-    return r.groupBy("event_type").agg(
-        F.sum(pick).cast("bigint").alias("med2")
     )
 
 
@@ -769,25 +746,19 @@ def expectations_audit(spark, sf_dir):
     li_rows = li_checks.select(F.explode(F.array("a", "b")).alias("r")).select(
         "r.*"
     )
+    checks = event_checks()  # the streaming quality gate runs these too
+
+    def event_audit(name):
+        violated, scope = checks[name]
+        return audit(
+            f"events_{name}",
+            F.lit(1) if scope is None else F.when(scope, 1),
+            F.when(violated, 1),
+        )
+
     ev_checks = e.agg(
-        audit(
-            "events_purchase_value_positive",
-            F.when(F.col("event_type") == "purchase", 1),
-            F.when(
-                (F.col("event_type") == "purchase")
-                & (F.col("value").isNull() | (F.col("value") <= 0)),
-                1,
-            ),
-        ).alias("a"),
-        audit(
-            "events_known_type",
-            F.lit(1),
-            F.when(
-                F.col("event_type").isNull()
-                | ~F.col("event_type").isin(*KNOWN_EVENT_TYPES),
-                1,
-            ),
-        ).alias("b"),
+        event_audit("purchase_value_positive").alias("a"),
+        event_audit("known_type").alias("b"),
     )
     ev_rows = ev_checks.select(F.explode(F.array("a", "b")).alias("r")).select(
         "r.*"

@@ -13,7 +13,6 @@ from ..io import load_table
 from ..operators.scale import widen
 from ..operators.projection import (
     RP_K,
-    RP_SEED,
     pca_components,
     pca_project,
     rp_project,

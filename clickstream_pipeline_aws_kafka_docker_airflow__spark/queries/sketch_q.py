@@ -20,9 +20,10 @@ rsd ~= 1.04/sqrt(2^14) = 0.8%, so the 5% band is a >6-sigma margin.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..io import load_table
+from ..operators.dedup import token_hash32_sql
 from ..registry import register
 
 HLL_LG_CONFIG_K = 14
@@ -108,6 +109,38 @@ CMSZ_K = 10  # heavy hitters to probe
 CMSZ_START, CMSZ_END = "2024-01-08", "2024-01-22"  # [start, end)
 
 
+def cms_bucket(key: str = "key", width: int = CMSZ_W) -> Column:
+    """Bucket ``b`` of the string column ``key`` in hash row ``s``: the
+    seeded portable hash that every count-min build and probe shares
+    (the oracles spell the same hash in DuckDB)."""
+    return F.expr(token_hash32_sql(f"CONCAT(CAST(s AS STRING), '|', {key})")) % width
+
+
+def _cms_rows() -> Column:
+    """One row per hash row ``s`` in [0, CMSZ_D)."""
+    return F.explode(F.sequence(F.lit(0), F.lit(CMSZ_D - 1))).alias("s")
+
+
+def cms_probes(df: DataFrame, *cols: str) -> DataFrame:
+    """``cols`` of ``df`` (``key`` among them) once per hash row ``s``,
+    with the row's bucket ``b``: the cells a point query reads."""
+    return df.select(*cols, _cms_rows()).withColumn("b", cms_bucket())
+
+
+def cms_cells(ev: DataFrame) -> DataFrame:
+    """(dt, s, b, cnt) count-min cells of (dt, key) event rows: one
+    {CMSZ_D}x{CMSZ_W} integer sketch per day. The batch zone table and
+    the streaming zone's delta layers (streaming/cms_zone.py) are both
+    this function, so zone-served estimates equal in-query ones."""
+    counts = ev.groupBy("dt", "key").agg(F.count(F.lit(1)).alias("n"))
+    return (
+        counts.select("dt", _cms_rows(), "key", "n")
+        .withColumn("b", cms_bucket())
+        .groupBy("dt", "s", "b")
+        .agg(F.sum("n").alias("cnt"))
+    )
+
+
 def _cms_range_oracle() -> str:
     from .pipeline_q import _hash32_duck
 
@@ -147,6 +180,17 @@ GROUP BY p.key, p.n
 """
 
 
+def _cms_range_events(spark, sf_dir) -> DataFrame:
+    """(dt, key) rows of the events in [CMSZ_START, CMSZ_END)."""
+    e = load_table(spark, sf_dir, "events").where(
+        (F.col("ts") >= F.lit(CMSZ_START).cast("timestamp"))
+        & (F.col("ts") < F.lit(CMSZ_END).cast("timestamp"))
+    )
+    return e.select(
+        F.to_date("ts").alias("dt"), F.col("user_id").cast("string").alias("key")
+    )
+
+
 def cms_daily_zone_table(spark, sf_dir):
     """Materialized daily CMS zone (dt, s, b, cnt) — the batch twin of
     the streaming zone (streaming/cms_zone.py): one {CMSZ_D}x{CMSZ_W}
@@ -155,35 +199,12 @@ def cms_daily_zone_table(spark, sf_dir):
     import os
 
     from ..operators.artifacts import materialized
-    from ..operators.dedup import token_hash32_sql
-
-    def _build():
-        e = load_table(spark, sf_dir, "events").where(
-            (F.col("ts") >= F.lit(CMSZ_START).cast("timestamp"))
-            & (F.col("ts") < F.lit(CMSZ_END).cast("timestamp"))
-        )
-        ev = e.select(
-            F.to_date("ts").alias("dt"),
-            F.col("user_id").cast("string").alias("key"),
-        )
-        counts = ev.groupBy("dt", "key").agg(F.count(F.lit(1)).alias("n"))
-        rows = counts.select(
-            "dt",
-            F.explode(F.sequence(F.lit(0), F.lit(CMSZ_D - 1))).alias("s"),
-            "key",
-            "n",
-        ).withColumn(
-            "b",
-            F.expr(token_hash32_sql("CONCAT(CAST(s AS STRING), '|', key)"))
-            % CMSZ_W,
-        )
-        return rows.groupBy("dt", "s", "b").agg(F.sum("n").alias("cnt"))
 
     return materialized(
         spark,
         os.path.join(sf_dir, "events.parquet"),
         "cms_daily_zone",
-        _build,
+        lambda: cms_cells(_cms_range_events(spark, sf_dir)),
         params=f"d{CMSZ_D}w{CMSZ_W}:{CMSZ_START}:{CMSZ_END}",
     )
 
@@ -206,15 +227,7 @@ def cms_range_topk(spark, sf_dir):
     — build, merge, probe — is bit-deterministic and fully
     value-hash-checked (unlike the engine-specific HLL registers,
     which need the error-band contract)."""
-    from ..operators.dedup import token_hash32_sql
-
-    e = load_table(spark, sf_dir, "events").where(
-        (F.col("ts") >= F.lit(CMSZ_START).cast("timestamp"))
-        & (F.col("ts") < F.lit(CMSZ_END).cast("timestamp"))
-    )
-    ev = e.select(
-        F.to_date("ts").alias("dt"), F.col("user_id").cast("string").alias("key")
-    )
+    ev = _cms_range_events(spark, sf_dir)
     daily = cms_daily_zone_table(spark, sf_dir)
     merged = daily.groupBy("s", "b").agg(F.sum("cnt").cast("bigint").alias("cnt"))
     exact = ev.groupBy("key").agg(F.count(F.lit(1)).alias("n"))
@@ -223,14 +236,9 @@ def cms_range_topk(spark, sf_dir):
     topk = exact.orderBy(
         F.col("n").desc(), F.asc_nulls_last("key")
     ).limit(CMSZ_K)
-    probes = topk.select(
-        "key", "n", F.explode(F.sequence(F.lit(0), F.lit(CMSZ_D - 1))).alias("s")
-    ).withColumn(
-        "b",
-        F.expr(token_hash32_sql("CONCAT(CAST(s AS STRING), '|', key)")) % CMSZ_W,
-    )
     return (
-        probes.join(F.broadcast(merged), ["s", "b"])
+        cms_probes(topk, "key", "n")
+        .join(F.broadcast(merged), ["s", "b"])
         .groupBy("key")
         .agg(F.max("n").cast("bigint").alias("n"), F.min("cnt").alias("est"))
         .select("key", "n", "est", (F.col("est") >= F.col("n")).alias("overcount_ok"))

@@ -16,9 +16,10 @@ from pyspark.sql.window import Window
 
 from ..io import load_table
 from ..operators.scale import widen
-from ..operators.similarity import IVF_NCENTROIDS, ivf_assignments
+from ..operators.similarity import IVF_NCENTROIDS
 from ..functions.vectors import dot, norm
 from ..registry import register
+from .sketch_q import cms_bucket
 
 CHUNK_TOKENS = 32
 CHUNK_STRIDE = 24  # < CHUNK_TOKENS -> overlapping context windows
@@ -474,12 +475,10 @@ def cms_heavy_hitters(spark, sf_dir):
     map-side. Building from pre-aggregated counts is equivalent to
     updating per occurrence (the sketch is linear in its input); a
     streaming job updates the same cells from the raw token stream.
-    The hash family is the repo-wide md5-nibble construction
-    (operators/dedup.py::token_hash32_sql) so DuckDB re-derives
-    identical buckets.
+    The hash is the daily CMS zone's (sketch_q.py::cms_bucket, the
+    repo-wide md5-nibble construction) so DuckDB re-derives identical
+    buckets.
     """
-    from ..operators.dedup import token_hash32_sql
-
     d = load_table(spark, sf_dir, "documents")
     counts = (
         d.select(
@@ -493,11 +492,7 @@ def cms_heavy_hitters(spark, sf_dir):
         F.explode(F.sequence(F.lit(0), F.lit(CMS_D - 1))).alias("s"),
         "token",
         "n",
-    ).withColumn(
-        "b",
-        F.expr(token_hash32_sql("CONCAT(CAST(s AS STRING), '|', token)"))
-        % CMS_W,
-    )
+    ).withColumn("b", cms_bucket("token", CMS_W))
     sketch = rows.groupBy("s", "b").agg(F.sum("n").alias("cnt"))
     topk = counts.orderBy(F.col("n").desc(), "token").limit(HH_K)
     probe = rows.join(F.broadcast(topk.select("token")), "token")

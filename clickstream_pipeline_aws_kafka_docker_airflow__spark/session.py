@@ -26,6 +26,7 @@ import contextlib
 import logging
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 _log = logging.getLogger(__name__)
@@ -58,7 +59,9 @@ def apply_engine_confs(spark: SparkSession) -> SparkSession:
     """Idempotently apply runtime-settable engine confs to a session.
 
     Called from every loader/operator entry point so the engine behaves
-    identically whether it created the session or was handed one.
+    identically whether it created the session or was handed one. Every
+    ENGINE_CONFS key is a runtime SQLConf, so a failure to set one
+    raises instead of leaving the engine silently unconfigured.
 
     ``$SPARK_GRAFT_EXTRA_CONFS`` ("k=v;k=v") is re-applied LAST on
     every call: a deliberate deployment override (e.g. a broadcast
@@ -75,10 +78,7 @@ def apply_engine_confs(spark: SparkSession) -> SparkSession:
     once per session so an inherited stale env var leaves a trace.
     """
     for k, v in ENGINE_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable on this build — keep going
+        spark.conf.set(k, v)
     raw = os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "")
     if raw:
         app = spark.sparkContext.applicationId
@@ -90,9 +90,23 @@ def apply_engine_confs(spark: SparkSession) -> SparkSession:
     for kv in raw.split(";"):
         k, _, v = kv.partition("=")
         if k.strip():
-            with contextlib.suppress(Exception):  # static-only conf
-                spark.conf.set(k.strip(), v.strip())
+            _set_unless_static(spark, k.strip(), v.strip())
     return spark
+
+
+# what a live session raises for a core or static conf, which only the
+# session builder can set
+_BUILD_TIME_ONLY = ("CANNOT_MODIFY_CONFIG", "CANNOT_MODIFY_STATIC_CONFIG")
+
+
+def _set_unless_static(spark: SparkSession, k: str, v: str) -> None:
+    """Set a runtime conf; skip one that only the builder can set (the
+    extras are also applied at build time), raise on anything else."""
+    try:
+        spark.conf.set(k, v)
+    except AnalysisException as e:
+        if e.getCondition() not in _BUILD_TIME_ONLY:
+            raise
 
 
 # Object-store (S3/s3a) conf surface — the cluster-deployment twin of
@@ -199,6 +213,5 @@ def get_spark(
         builder = builder.config(k.strip(), v.strip())
     spark = apply_engine_confs(builder.getOrCreate())
     for k, _, v in extras:
-        with contextlib.suppress(Exception):  # static conf on a live session
-            spark.conf.set(k.strip(), v.strip())
+        _set_unless_static(spark, k.strip(), v.strip())
     return spark

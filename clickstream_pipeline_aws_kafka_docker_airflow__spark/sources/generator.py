@@ -137,15 +137,10 @@ PURCHASE_MIN_DRAW = TYPE_THRESHOLDS[-1]  # draw >= this -> purchase
 PRICE_CENT_SPAN = 11500  # uniform(5,120) in cents: 500 + [0, 11500)
 
 
-def _det_draw(field: str, i: Column) -> Column:
-    """24-bit deterministic uniform draw for (field, row-index)."""
-    h = F.md5(F.concat(F.lit(f"{GEN_SEED}|{field}|"), i.cast("string")))
-    return F.conv(F.substring(h, 1, 6), 16, 10).cast("bigint")
-
-
 def det_draw_duckdb_sql(field: str, i_sql: str) -> str:
-    """DuckDB twin of :func:`_det_draw` — strpos nibble ladder (DuckDB
-    has no base-16 conv)."""
+    """DuckDB spelling of the 24-bit deterministic uniform draw for
+    (field, row-index) — strpos nibble ladder (DuckDB has no base-16
+    conv)."""
     h = f"md5('{GEN_SEED}|{field}|' || CAST({i_sql} AS VARCHAR))"
     terms = " + ".join(
         f"(strpos('{HEX}', substr({h}, {p + 1}, 1)) - 1) * {16 ** (5 - p)}"
@@ -154,20 +149,8 @@ def det_draw_duckdb_sql(field: str, i_sql: str) -> str:
     return f"({terms})"
 
 
-def _det_uuid(i: Column) -> Column:
-    """UUID-shaped deterministic id: md5 hex grouped 8-4-4-4-12."""
-    h = F.md5(F.concat(F.lit(f"{GEN_SEED}|sess|"), i.cast("string")))
-    return F.concat_ws(
-        "-",
-        F.substring(h, 1, 8),
-        F.substring(h, 9, 4),
-        F.substring(h, 13, 4),
-        F.substring(h, 17, 4),
-        F.substring(h, 21, 12),
-    )
-
-
 def det_uuid_duckdb_sql(i_sql: str) -> str:
+    """UUID-shaped deterministic id: md5 hex grouped 8-4-4-4-12."""
     h = f"md5('{GEN_SEED}|sess|' || CAST({i_sql} AS VARCHAR))"
     return (
         f"substr({h},1,8) || '-' || substr({h},9,4) || '-' || "
@@ -225,12 +208,12 @@ def ff_schedule(
 
 def _det_select_sqls(start_date: str, step_us: int) -> list[str]:
     """One-parse SQL spelling of the deterministic generator's select
-    list (r12, the fold_dot_sql lesson): the Column-DSL construction of
-    these ten expressions costs ~0.2-0.3 s of py4j round-trips per
-    query build, while a single ``selectExpr`` parse is ~2 ms. Each
-    string mirrors its DSL twin token for token, so the analyzed plan
-    is IDENTICAL (pinned by tests/test_generator.py::
-    test_deterministic_sql_spelling_matches_dsl)."""
+    list (r12, the fold_dot_sql lesson): a single ``selectExpr`` parse
+    is ~2 ms, where the Column-DSL construction of these ten
+    expressions cost ~0.2-0.3 s of py4j round-trips per query build.
+    Its reference is the DuckDB spelling in
+    :func:`gen_events_oracle_sql`, which the ``gen_synthetic_events``
+    and ``kafka_payload_roundtrip`` oracles check it against."""
 
     def h(field: str) -> str:
         return f"md5(concat('{GEN_SEED}|{field}|', CAST(id AS STRING)))"
@@ -279,61 +262,18 @@ def generate_events_batch_deterministic(
     start_date: str = "2025-09-01",
     days: int = 7,
     num_partitions: int | None = None,
-    use_sql: bool = True,
 ) -> DataFrame:
     """Reproducible fast-forward backfill: same schema/distributions as
     :func:`generate_events_batch`, draws derived from the row index.
     Scale shape is identical — ``spark.range`` slices, no shuffle, no
     driver loop; md5 + integer ops run inside whole-stage codegen.
     ``n_events`` is the FF_EVENTS_TARGET; actual count/step follow the
-    reference edge semantics via :func:`ff_schedule`. ``use_sql``
-    selects the single-parse selectExpr spelling (identical plan,
-    ~0.2 s less py4j chatter per build); the Column-DSL twin stays as
-    the equivalence anchor."""
+    reference edge semantics via :func:`ff_schedule`."""
     step_us, n_rows = ff_schedule(n_events, days)
     base = spark.range(
         0, n_rows, 1, num_partitions or spark.sparkContext.defaultParallelism
     )
-    if use_sql:
-        return base.selectExpr(*_det_select_sqls(start_date, step_us))
-    i = F.col("id")
-    ts = F.timestamp_micros(
-        F.unix_micros(F.lit(start_date).cast("timestamp")) + i * step_us
-    )
-    d_type = _det_draw("type", i)
-    etype = (
-        F.when(d_type < TYPE_THRESHOLDS[0], EVENT_TYPES[0])
-        .when(d_type < TYPE_THRESHOLDS[1], EVENT_TYPES[1])
-        .when(d_type < TYPE_THRESHOLDS[2], EVENT_TYPES[2])
-        .otherwise(EVENT_TYPES[3])
-    )
-    # scaled-integer index selection: (draw * n) >> 24 — pure integer
-    # ops, bit-identical across engines (the oracle uses `>> 24` too)
-    u_idx = F.shiftright(_det_draw("user", i) * N_USERS, DRAW_BITS)
-    sku_idx = F.shiftright(_det_draw("sku", i) * N_SKUS, DRAW_BITS)
-    page_idx = F.shiftright(_det_draw("page", i) * len(PAGES), DRAW_BITS).cast("int")
-    ref_idx = F.shiftright(
-        _det_draw("ref", i) * len(REFERRERS), DRAW_BITS
-    ).cast("int")
-    cents = F.lit(500) + F.shiftright(
-        _det_draw("price", i) * PRICE_CENT_SPAN, DRAW_BITS
-    )
-    return base.select(
-        F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'").alias("event_ts"),
-        F.concat(F.lit("u_"), (u_idx + 1).cast("string")).alias("user_id"),
-        _det_uuid(i).alias("session_id"),
-        etype.alias("event_type"),
-        F.element_at(F.array(*[F.lit(p) for p in PAGES]), page_idx + 1).alias("page"),
-        F.concat(F.lit("sku_"), (sku_idx + 1).cast("string")).alias("product_id"),
-        F.when(
-            d_type >= PURCHASE_MIN_DRAW, cents / F.lit(100).cast("double")
-        ).alias("price"),
-        F.lit("USD").alias("currency"),
-        F.element_at(
-            F.array(*[F.lit(r) for r in REFERRERS]), ref_idx + 1
-        ).alias("referrer"),
-        F.lit(USER_AGENT).alias("user_agent"),
-    )
+    return base.selectExpr(*_det_select_sqls(start_date, step_us))
 
 
 def gen_events_oracle_sql(n_events: int, start_us: int, days: int) -> str:

@@ -35,9 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.dedup import token_hash32_sql
-from ..queries.sketch_q import CMSZ_D, CMSZ_W
-from .upsert import overwrite_partitions
+from ..queries.sketch_q import cms_cells, cms_probes
+from .upsert import foreach_batch_writer, overwrite_partitions
 
 COMPACTED_LAYER = -1  # first compacted-generation id; later ones -2, -3, ...
 MANIFEST_SLOT = -1  # s value marking in-band manifest rows
@@ -76,31 +75,6 @@ def _visible_cells(zone: DataFrame) -> DataFrame:
     )
 
 
-def _cells(events: DataFrame, ts_col: str, key_col: str) -> DataFrame:
-    """(dt, s, b, cnt) cell deltas for one slice of events — the same
-    seeded portable hash as the batch query, so zone-served estimates
-    equal in-query ones."""
-    counts = events.select(
-        F.to_date(ts_col).cast("string").alias("dt"),
-        F.col(key_col).cast("string").alias("key"),
-    ).groupBy("dt", "key").agg(F.count(F.lit(1)).alias("n"))
-    return (
-        counts.select(
-            "dt",
-            F.explode(F.sequence(F.lit(0), F.lit(CMSZ_D - 1))).alias("s"),
-            "key",
-            "n",
-        )
-        .withColumn(
-            "b",
-            F.expr(token_hash32_sql("CONCAT(CAST(s AS STRING), '|', key)"))
-            % CMSZ_W,
-        )
-        .groupBy("dt", "s", "b")
-        .agg(F.sum("n").alias("cnt"))
-    )
-
-
 def start_cms_zone(
     stream_events: DataFrame,
     zone_dir: str,
@@ -111,25 +85,28 @@ def start_cms_zone(
     """Fold the stream into batch-keyed CMS delta layers. Stateless —
     no watermark, no streaming aggregation state: each micro-batch's
     deltas are final, and late events simply land in a later layer
-    (cells add, so lateness never needs retraction)."""
+    (cells add, so lateness never needs retraction). The deltas are
+    ``sketch_q.cms_cells`` of the micro-batch, the batch zone's own
+    derivation."""
 
     def _layer(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        cells = _cells(batch_df, ts_col, key_col)
+        cells = cms_cells(
+            batch_df.select(
+                F.to_date(ts_col).cast("string").alias("dt"),
+                F.col(key_col).cast("string").alias("key"),
+            )
+        )
         overwrite_partitions(
             cells.withColumn("batch_id", F.lit(batch_id)).repartition(1),
             zone_dir,
             "batch_id",
         )
 
-    return (
-        stream_events.writeStream.foreachBatch(_layer)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_writer(
+        stream_events, _layer, checkpoint_dir, "append"
+    ).start()
 
 
 def _gc_layers(
@@ -232,14 +209,9 @@ def estimates_from_zone(
         .agg(F.sum("cnt").alias("cnt"))
     )
     kdf = spark.createDataFrame([(k,) for k in keys], "key string")
-    probes = kdf.select(
-        "key", F.explode(F.sequence(F.lit(0), F.lit(CMSZ_D - 1))).alias("s")
-    ).withColumn(
-        "b",
-        F.expr(token_hash32_sql("CONCAT(CAST(s AS STRING), '|', key)")) % CMSZ_W,
-    )
     return (
-        probes.join(merged, ["s", "b"], "left")
+        cms_probes(kdf, "key")
+        .join(merged, ["s", "b"], "left")
         .groupBy("key")
         .agg(F.min(F.coalesce("cnt", F.lit(0))).cast("bigint").alias("est"))
     )

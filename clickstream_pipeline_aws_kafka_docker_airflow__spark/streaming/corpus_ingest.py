@@ -44,7 +44,7 @@ from ..operators.dedup import (
     shingle_table,
 )
 from .release import checkpoint_release_scope
-from .upsert import overwrite_partitions
+from .upsert import foreach_batch_writer, overwrite_partitions
 
 # admit a new doc only if its signature agrees with every stored
 # signature on FEWER than this many of the NUM_HASHES minhashes
@@ -176,13 +176,9 @@ def start_dedup_corpus_ingest(
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         _dedup_one_batch(batch_df, batch_id, corpus_dir, redact=redact)
 
-    return (
-        stream_docs.writeStream.foreachBatch(_ingest)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_writer(
+        stream_docs, _ingest, checkpoint_dir, "append"
+    ).start()
 
 
 def load_corpus(spark, corpus_dir: str) -> DataFrame:

@@ -19,12 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.scalars import (
-    dec_sum_round2,
-    is_pageview,
-    is_purchase,
-    price_or_zero,
-)
+from ..operators.kpis import kpi_aggs
 
 
 def windowed_kpis(
@@ -37,40 +32,20 @@ def windowed_kpis(
     price: str = "value",
     session: str | None = None,
 ) -> DataFrame:
-    """Event-time tumbling-window KPIs with a late-data watermark."""
-    aggs = [
-        F.count(F.lit(1)).alias("total_events"),
-        F.approx_count_distinct(user).alias("unique_users"),
-    ]
-    if session is not None:
-        aggs.append(F.approx_count_distinct(session).alias("unique_sessions"))
-    aggs += [
-        F.count(F.when(is_pageview(etype), 1)).alias("pageviews"),
-        F.count(F.when(is_purchase(etype), 1)).alias("purchases"),
-        # decimal accumulation, NOT round2(sum(double)): partial-agg
-        # summation order differs between micro-batch replays, and a
-        # sum within an ulp of a .005 boundary would round differently
-        # — the same instability the batch tier fixed in
-        # functions/scalars.py::dec_sum_round2. Stream and batch
-        # revenue now agree exactly.
-        dec_sum_round2(
-            F.when(is_purchase(etype), price_or_zero(price)).otherwise(0.0)
-        ).alias("revenue_usd"),
-    ]
-    out_cols = (
-        ["total_events", "unique_users"]
-        + (["unique_sessions"] if session is not None else [])
-        + ["pageviews", "purchases", "revenue_usd"]
-    )
-    return (
+    """Event-time tumbling-window KPIs with a late-data watermark: the
+    batch aggregates of ``operators/kpis.kpi_aggs`` with HLL distincts,
+    grouped by window instead of by day."""
+    agg = (
         events.withWatermark(ts_col, watermark)
         .groupBy(F.window(ts_col, window).alias("w"))
-        .agg(*aggs)
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            *out_cols,
+        .agg(
+            *kpi_aggs(user, etype, price, session, approx_distinct=True)
         )
+    )
+    return agg.select(
+        F.col("w.start").alias("window_start"),
+        F.col("w.end").alias("window_end"),
+        *agg.columns[1:],
     )
 
 

@@ -27,36 +27,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..functions.scalars import KNOWN_EVENT_TYPES
-from .upsert import overwrite_partitions
+from ..functions.scalars import event_checks
+from .upsert import foreach_batch_writer, overwrite_partitions
 
 
-def _event_checks() -> dict[str, Column]:
-    """check name -> VIOLATION predicate (true == row fails)."""
-    return {
-        "ts_present": F.col("ts").isNull(),
-        # NULL is a violation too: bare ~isin() is NULL for NULL input,
-        # which when() treats as false — missing event_type must not
-        # slip into the accepted zone.
-        "known_type": F.col("event_type").isNull()
-        | ~F.col("event_type").isin(*KNOWN_EVENT_TYPES),
-        "purchase_value_positive": (F.col("event_type") == "purchase")
-        & (F.col("value").isNull() | (F.col("value") <= 0)),
-    }
-
-
-def _check_scopes() -> dict[str, Column]:
-    """check name -> CHECKED-population predicate, the denominator the
-    metrics zone reports. Must mirror the batch expectations_audit
-    (queries/misc_q.py): purchase_value_positive checks PURCHASE rows,
-    not the whole batch — a total-rows denominator would dilute the
-    violation rate ~100x relative to the batch tier and any promotion
-    gate comparing the two would misread it."""
-    return {
-        "ts_present": F.lit(True),
-        "known_type": F.lit(True),
-        "purchase_value_positive": F.col("event_type") == "purchase",
-    }
+def gate_checks() -> dict[str, tuple[Column, Column | None]]:
+    """check name -> (VIOLATION predicate, CHECKED-population
+    predicate): the gate-only ``ts_present`` plus the event checks the
+    batch expectations_audit runs (functions/scalars.py::event_checks),
+    so both tiers count the same violations over the same denominators
+    — purchase_value_positive checks PURCHASE rows, not the whole
+    batch, in both."""
+    return {"ts_present": (F.col("ts").isNull(), None), **event_checks()}
 
 
 def accepted_zone(gate_dir: str) -> str:
@@ -74,25 +56,26 @@ def metrics_zone(gate_dir: str) -> str:
 def _gate_one_batch(batch_df: DataFrame, batch_id: int, gate_dir: str) -> None:
     if batch_df.isEmpty():
         return
-    checks = _event_checks()
+    checks = gate_checks()
     # one pass: a violations array naming every failed check
     viol = F.array_compact(
         F.array(
-            *[F.when(pred, F.lit(name)) for name, pred in checks.items()]
+            *[F.when(pred, F.lit(name)) for name, (pred, _) in checks.items()]
         )
     )
     flagged = batch_df.withColumn("violations", viol)
     accepted = flagged.where(F.size("violations") == 0).drop("violations")
     quarantined = flagged.where(F.size("violations") > 0)
-    scopes = _check_scopes()
     metrics = batch_df.agg(
         *[
             F.count(F.when(pred, 1)).alias(name)
-            for name, pred in checks.items()
+            for name, (pred, _) in checks.items()
         ],
         *[
-            F.count(F.when(scopes[name], 1)).alias(f"_n_{name}")
-            for name in checks
+            F.count(F.when(F.lit(True) if scope is None else scope, 1)).alias(
+                f"_n_{name}"
+            )
+            for name, (_, scope) in checks.items()
         ],
     ).select(
         F.explode(
@@ -131,10 +114,6 @@ def start_quality_gate(
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         _gate_one_batch(batch_df, batch_id, gate_dir)
 
-    return (
-        stream_events.writeStream.foreachBatch(_gate)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_writer(
+        stream_events, _gate, checkpoint_dir, "append"
+    ).start()

@@ -65,14 +65,17 @@ def overwrite_partitions(df: DataFrame, path: str, partition_col: str) -> None:
         df.write.partitionBy(partition_col).mode("overwrite").parquet(path)
 
 
-def _update_writer(
+def foreach_batch_writer(
     stream_df: DataFrame,
     batch_fn: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
+    output_mode: str,
 ) -> DataStreamWriter:
+    """The AvailableNow ``foreachBatch`` writer every zone stream
+    starts: drain what the source holds, then stop."""
     return (
         stream_df.writeStream.foreachBatch(batch_fn)
-        .outputMode("update")
+        .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
     )
@@ -91,7 +94,9 @@ def start_partition_keyed(
     with temp_confs(
         stream_df.sparkSession, {"spark.sql.shuffle.partitions": "1"}
     ):
-        return _update_writer(stream_df, batch_fn, checkpoint_dir).start()
+        return foreach_batch_writer(
+            stream_df, batch_fn, checkpoint_dir, "update"
+        ).start()
 
 
 def start_partition_upsert(
@@ -144,5 +149,7 @@ def start_partition_upsert(
         return survivors.unionByName(out).localCheckpoint()
 
     if keys:
-        return _update_writer(stream_df, _upsert, checkpoint_dir).start()
+        return foreach_batch_writer(
+            stream_df, _upsert, checkpoint_dir, "update"
+        ).start()
     return start_partition_keyed(stream_df, _upsert, checkpoint_dir)

@@ -338,7 +338,7 @@ def batch_twins(spark, soak: Soak) -> dict:
         windowed_kpis,
     )
     from clickstream_pipeline_aws_kafka_docker_airflow__spark.streaming.quality_gate import (
-        _event_checks,
+        gate_checks,
     )
 
     def rows(df):
@@ -357,7 +357,7 @@ def batch_twins(spark, soak: Soak) -> dict:
     )
     raw_batch = spark.read.json(twin_dir)
     ev = _raw_as_events(spark.read.json(soak.raw))
-    checks = _event_checks()
+    checks = {n: p for n, (p, _) in gate_checks().items()}
     viol = F.array_compact(
         F.array(*[F.when(p, F.lit(n)) for n, p in checks.items()])
     )

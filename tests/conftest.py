@@ -57,6 +57,8 @@ def state_partitions_from_session(spark, n: int):
         m.setattr(
             upsert,
             "start_partition_keyed",
-            lambda sdf, fn, ck: upsert._update_writer(sdf, fn, ck).start(),
+            lambda sdf, fn, ck: upsert.foreach_batch_writer(
+                sdf, fn, ck, "update"
+            ).start(),
         )
         yield

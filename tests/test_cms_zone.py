@@ -164,3 +164,42 @@ def test_cms_zone_uncommitted_compaction_layer_is_invisible(spark, tmp_path):
     # torn layer GC'd; only the new compacted generation remains
     assert [p.rsplit("=", 1)[1] for p in layers] == ["-8"]
     assert _ests(spark, zone) == before
+
+
+def test_zone_cells_equal_batch_zone_table(spark, tmp_path, monkeypatch):
+    """The streaming zone's visible cells equal ``cms_daily_zone_table``
+    over the same events: zone-served estimates equal in-query ones."""
+    from clickstream_pipeline_aws_kafka_docker_airflow__spark.operators import (
+        artifacts,
+    )
+    from clickstream_pipeline_aws_kafka_docker_airflow__spark.queries.sketch_q import (
+        cms_daily_zone_table,
+    )
+    from clickstream_pipeline_aws_kafka_docker_airflow__spark.streaming.cms_zone import (
+        _visible_cells,
+    )
+
+    monkeypatch.setattr(artifacts, "ARTIFACT_ROOT", str(tmp_path / "artifacts"))
+    users = ["alice", "bob", "carol", "dave", None]
+    rows = [
+        (f"2024-01-{8 + i % 5:02d} {i % 24:02d}:00:00", users[i * 7 % 5])
+        for i in range(60)
+    ]
+    events = str(tmp_path / "sf" / "events.parquet")
+    _events(spark, rows).coalesce(1).write.parquet(events)
+    zone = tmp_path / "zone"
+    q = start_cms_zone(
+        spark.readStream.schema("ts timestamp, user_id string").parquet(events),
+        str(zone),
+        str(tmp_path / "ckpt"),
+    )
+    assert q.awaitTermination(180), "stream did not drain"
+
+    def cells(df):
+        return sorted(
+            (str(r["dt"]), r["s"], r["b"], r["cnt"]) for r in df.collect()
+        )
+
+    batch = cells(cms_daily_zone_table(spark, str(tmp_path / "sf")))
+    assert len({c[0] for c in batch}) == 5
+    assert cells(_visible_cells(spark.read.parquet(str(zone)))) == batch

@@ -60,28 +60,3 @@ def test_generator_feeds_kpis(spark):
     for r in out:
         assert r["pageviews"] > 0 and r["purchases"] > 0
         assert r["unique_sessions"] == r["total_events"]  # degenerate sessions
-
-
-def test_deterministic_sql_spelling_matches_dsl(spark):
-    """r12 single-parse selectExpr spelling of the deterministic
-    generator: the analyzed plan must be IDENTICAL to the Column-DSL
-    twin (modulo expression ids) and the rows bit-equal — the SQL path
-    is a driver-latency cut, not a semantics change."""
-    import re
-
-    from clickstream_pipeline_aws_kafka_docker_airflow__spark.sources.generator import (
-        generate_events_batch_deterministic,
-    )
-
-    a = generate_events_batch_deterministic(spark, 97, days=3, use_sql=True)
-    b = generate_events_batch_deterministic(spark, 97, days=3, use_sql=False)
-    assert a.schema == b.schema
-    assert a.collect() == b.collect()
-
-    def norm(df):
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        return re.sub(r"#\d+", "#", plan)
-
-    assert norm(a) == norm(b)

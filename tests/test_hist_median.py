@@ -1,38 +1,17 @@
 """Property test for the histogram-median rank arithmetic that
-``mad_outliers`` now uses instead of corpus row_number ranking: for any
-multiset of integer values, the doubled median computed from the
+``mad_outliers`` uses instead of corpus row_number ranking: for any
+multiset of integer values, ``misc_q.med2_from_hist`` over the
 (value, count) histogram must equal sorted[(n-1)//2] + sorted[n//2]."""
 
 from __future__ import annotations
 
 from collections import Counter
 
-from hypothesis import given, settings, strategies as st
-from pyspark.sql import Window, functions as F
+from hypothesis import example, given, settings, strategies as st
 
-
-def _med2_hist_spark(spark, groups: dict[str, list[int]]) -> dict[str, int]:
-    """Run the exact med2_from_hist shape from queries/misc_q.py over
-    per-group value lists; returns {group: med2}."""
-    rows = [
-        (g, v, k)
-        for g, vals in groups.items()
-        for v, k in Counter(vals).items()
-    ]
-    h = spark.createDataFrame(rows, "event_type string, c long, k long")
-    w = Window.partitionBy("event_type").orderBy("c")
-    wn = Window.partitionBy("event_type")
-    r = (
-        h.withColumn("_hi", F.sum("k").over(w))
-        .withColumn("_lo", F.col("_hi") - F.col("k") + 1)
-        .withColumn("_n", F.sum("k").over(wn))
-    )
-    m1 = F.expr("(_n + 1) div 2")
-    m2 = F.expr("_n div 2 + 1")
-    covers = lambda m: (F.col("_lo") <= m) & (m <= F.col("_hi"))  # noqa: E731
-    pick = F.col("c") * (covers(m1).cast("bigint") + covers(m2).cast("bigint"))
-    out = r.groupBy("event_type").agg(F.sum(pick).cast("bigint").alias("med2"))
-    return {x["event_type"]: x["med2"] for x in out.collect()}
+from clickstream_pipeline_aws_kafka_docker_airflow__spark.queries.misc_q import (
+    med2_from_hist,
+)
 
 
 @given(
@@ -43,41 +22,17 @@ def _med2_hist_spark(spark, groups: dict[str, list[int]]) -> dict[str, int]:
         max_size=3,
     )
 )
+# tie- and negative-heavy: repeated values straddle both middle ranks
+@example({"a": [-5, -5, -5, 0, 7, 7], "b": [2, 2, 2, 2], "c": [-1]})
 @settings(max_examples=12, deadline=None)
 def test_hist_med2_equals_sorted_median(spark, groups):
-    got = _med2_hist_spark(spark, groups)
+    h = spark.createDataFrame(
+        [(g, v, k) for g, vals in groups.items() for v, k in Counter(vals).items()],
+        "event_type string, c bigint, k bigint",
+    )
+    got = {r["event_type"]: r["med2"] for r in med2_from_hist(h, "c").collect()}
     for g, vals in groups.items():
         s = sorted(vals)
         n = len(s)
         expect = s[(n - 1) // 2] + s[n // 2]
         assert got[g] == expect, (g, s, got[g], expect)
-
-
-def test_med2_sql_spelling_matches_dsl(spark):
-    """r12 single-parse selectExpr spelling of med2_from_hist: the
-    analyzed plan must be IDENTICAL to the Column-DSL twin (modulo
-    expression ids) and rows equal on a tie/negative-heavy histogram."""
-    import re
-
-    from clickstream_pipeline_aws_kafka_docker_airflow__spark.queries.misc_q import (
-        med2_from_hist,
-        med2_from_hist_dsl,
-    )
-
-    h = spark.createDataFrame(
-        [("a", -5, 3), ("a", 0, 1), ("a", 7, 2), ("b", 2, 4), ("c", -1, 1)],
-        "event_type string, c bigint, k bigint",
-    )
-    sql_df = med2_from_hist(h, "c")
-    dsl_df = med2_from_hist_dsl(h, "c")
-    assert sorted(map(tuple, sql_df.collect())) == sorted(
-        map(tuple, dsl_df.collect())
-    )
-
-    def norm(df):
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        return re.sub(r"#\d+|plan_id=\d+", "#", plan)
-
-    assert norm(sql_df) == norm(dsl_df)

@@ -36,12 +36,8 @@ def test_cms_daily_merge_equals_direct_build(spark):
     whole range."""
     from pyspark.sql import functions as F
 
-    from clickstream_pipeline_aws_kafka_docker_airflow__spark.operators.dedup import (
-        token_hash32_sql,
-    )
     from clickstream_pipeline_aws_kafka_docker_airflow__spark.queries.sketch_q import (
-        CMSZ_D,
-        CMSZ_W,
+        cms_probes,
     )
 
     rows = [
@@ -52,15 +48,7 @@ def test_cms_daily_merge_equals_direct_build(spark):
 
     def cells(df, with_day):
         keys = ["dt", "s", "b"] if with_day else ["s", "b"]
-        r = df.select(
-            "dt",
-            F.explode(F.sequence(F.lit(0), F.lit(CMSZ_D - 1))).alias("s"),
-            "key",
-        ).withColumn(
-            "b",
-            F.expr(token_hash32_sql("CONCAT(CAST(s AS STRING), '|', key)"))
-            % CMSZ_W,
-        )
+        r = cms_probes(df, "dt", "key")
         return r.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt"))
 
     daily_merged = (

@@ -70,3 +70,53 @@ def test_streaming_sessions(spark, tmp_path):
     assert len(per_user["u1"]) == 2
     assert len(per_user["u2"]) == 1
     assert sum(r["n_events"] for r in per_user["u1"]) == 3
+
+
+def test_daily_window_equals_batch_daily_kpis(spark, tmp_path):
+    """A 1-day ``windowed_kpis`` stream and the batch
+    ``daily_kpis(..., approx_distinct=True)`` are one aggregation: equal
+    in every column on the same rows."""
+    from clickstream_pipeline_aws_kafka_docker_airflow__spark.operators.kpis import (
+        daily_kpis,
+    )
+
+    types = ["page_view", "PURCHASE", "view", "checkout", None, "click"]
+    rows = [
+        Row(
+            ts=dt.datetime(2025, 9, 1 + i % 3, i % 24, i % 60),
+            user_id=f"u{i % 11}" if i % 13 else None,
+            session_id=f"s{i % 17}",
+            event_type=types[i % len(types)],
+            value=None if i % 4 == 0 else round(0.01 * i + 0.005, 3),
+        )
+        for i in range(90)
+    ]
+    kw = dict(user="user_id", etype="event_type", price="value", session="session_id")
+    q = (
+        windowed_kpis(_stream_from_rows(spark, tmp_path, rows), **kw)
+        .writeStream.format("memory")
+        .queryName("kpi_day")
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    stream = {
+        r["d"]: r.asDict()
+        for r in spark.sql(
+            "SELECT CAST(window_start AS DATE) AS d, * FROM kpi_day"
+        ).collect()
+    }
+    batch = {
+        r["dt"]: r.asDict()
+        for r in daily_kpis(
+            spark.createDataFrame(rows), approx_distinct=True, **kw
+        ).collect()
+    }
+    assert len(batch) == 3 and stream.keys() == batch.keys()
+    cols = [
+        "total_events", "unique_users", "unique_sessions",
+        "pageviews", "purchases", "revenue_usd",
+    ]
+    for day, b in batch.items():
+        assert [stream[day][c] for c in cols] == [b[c] for c in cols], day
