@@ -15,11 +15,11 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from clickstream_pipeline_aws_kafka_docker_airflow__spark import registry
+from clickstream_pipeline_aws_kafka_docker_airflow__spark.profile import profile
 from clickstream_pipeline_aws_kafka_docker_airflow__spark.session import get_spark
 
 N_RUNS = 2
@@ -64,32 +64,24 @@ def main() -> None:
     times: dict[str, float] = {}
     jobs: dict[str, int] = {}
     errors: dict[str, str] = {}
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    for i in range(N_RUNS):
+    for _ in range(N_RUNS):
         for name in sorted(qs):
             if name in errors:
                 continue
-            group = f"bench:{name}:{i}"
-            sc.setJobGroup(group, name)
             try:
-                t0 = time.perf_counter()
-                _force(qs[name](spark, sf_dir))
-                t = time.perf_counter() - t0
+                with profile(spark) as rec:
+                    _force(qs[name](spark, sf_dir))
             except Exception as ex:  # noqa: BLE001 — isolate, record, continue
                 errors[name] = f"{type(ex).__name__}: {str(ex).splitlines()[0][:200]}"
                 times.pop(name, None)
                 jobs.pop(name, None)
                 continue
-            finally:
-                sc._jsc.sc().clearJobGroup()
-            times[name] = round(min(times.get(name, float("inf")), t), 4)
+            times[name] = round(min(times.get(name, float("inf")), rec.wall_s), 4)
             # warm-path job count (min across passes): with a ~0.2 s
             # fixed cost per local job, job count IS the local cost
             # model — recorded so regressions show up as integers, not
             # as noise-prone wall-clock drift
-            n_jobs = len(tracker.getJobIdsForGroup(group) or [])
-            jobs[name] = min(jobs.get(name, 1 << 30), n_jobs)
+            jobs[name] = min(jobs.get(name, 1 << 30), rec.jobs)
 
     total = round(sum(times.values()), 4)
     out = {

@@ -34,9 +34,10 @@ Two physical strategies, identical output:
   event IS prev_end; bucket b+1's first event IS start).
 
 Fuzzed against a pure-Python single-pass twin and raced against
-``direct`` in tests/test_sessionize_salted.py; driver-oracle parity via
-sessionize_30min (queries/events_q.py), which dispatches on
-SPARK_GRAFT_SESSIONIZE_MODE.
+``direct`` in tests/test_sessionize_salted.py. The registered
+``sessionize_30min`` (queries/events_q.py) runs ``direct``; the tests
+hold ``two_phase`` to that query's oracle on the adversarial and empty
+fixtures, and the skew probe (scripts/scale_probe.py skew) measures it.
 """
 
 from __future__ import annotations

@@ -402,29 +402,6 @@ def kmeans_centroid_list(
     return cents
 
 
-def ivf_assignments(
-    emb: DataFrame,
-    n_centroids: int = IVF_NCENTROIDS,
-    n_iters: int = IVF_KMEANS_ITERS,
-    top: int | None = None,
-) -> DataFrame:
-    """Coarse quantizer: nearest-centroid ranking per vector against
-    the (optionally k-means-refined) centroid set, limited to the
-    ``top`` nearest cells (default: full ranking)."""
-    from .scale import widen
-
-    if n_iters > 0:
-        cents = kmeans_centroid_list(emb, n_centroids, n_iters)
-    else:
-        cents = sorted(
-            (r["vec_id"], [float(x) for x in r["embedding"]])
-            for r in emb.where(F.col("vec_id") < n_centroids)
-            .select("vec_id", "embedding")
-            .collect()
-        )
-    return _assign_to_centroids(widen(emb), cents, top=top or len(cents))
-
-
 def ivf_topk(
     emb: DataFrame,
     n_queries: int,

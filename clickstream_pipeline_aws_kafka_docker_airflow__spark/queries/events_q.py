@@ -89,19 +89,16 @@ GROUP BY user_id, session_idx
 )
 def sessionize_30min(spark, sf_dir):
     """Gap-based sessionization (ext_sessionize): lag + cumulative-sum
-    of gap flags (operators/sessionize.py). Default ``direct`` mode is
-    one shuffle on user_id with the analytic functions and the final
-    groupBy reusing the same hash partitioning (single exchange);
-    SPARK_GRAFT_SESSIONIZE_MODE=two_phase flips to the skew-proof
-    bucketed variant (identical values — same oracle, see
-    docs/SKEW_PROBE.json for the hot-key evidence)."""
-    import os
-
+    of gap flags (operators/sessionize.py), ``direct`` strategy: one
+    shuffle on user_id with the analytic functions and the final
+    groupBy reusing the same hash partitioning (single exchange). The
+    skew-proof ``two_phase`` operator mode returns identical values
+    (tests/test_sessionize_salted.py; docs/SKEW_PROBE.json for the
+    hot-key evidence)."""
     from ..operators.sessionize import sessionize
 
     e = load_table(spark, sf_dir, "events")
-    mode = os.environ.get("SPARK_GRAFT_SESSIONIZE_MODE", "direct")
-    return sessionize(e, SESSION_GAP_US, mode=mode)
+    return sessionize(e, SESSION_GAP_US)
 
 
 @register(

@@ -202,16 +202,10 @@ def get_spark(
     # Harness hook: $SPARK_GRAFT_EXTRA_CONFS="k=v;k=v" lets perf probes
     # (scripts/scaling_curve.py) override split sizing per subprocess
     # without forking the session builder. Set at build time (for
-    # static confs) AND re-set at runtime after apply_engine_confs so
-    # an override of an ENGINE_CONFS key sticks.
-    extras = [
-        kv.partition("=")
-        for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "").split(";")
-        if "=" in kv
-    ]
-    for k, _, v in extras:
-        builder = builder.config(k.strip(), v.strip())
-    spark = apply_engine_confs(builder.getOrCreate())
-    for k, _, v in extras:
-        _set_unless_static(spark, k.strip(), v.strip())
-    return spark
+    # static confs); apply_engine_confs re-applies it last, so an
+    # override of an ENGINE_CONFS key sticks.
+    for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "").split(";"):
+        k, _, v = kv.partition("=")
+        if "=" in kv:
+            builder = builder.config(k.strip(), v.strip())
+    return apply_engine_confs(builder.getOrCreate())

@@ -23,7 +23,7 @@ far past production density), and 1g with a heap-proportional 8 MB
 broadcast threshold (see TIERS note). Fixed core count so ONLY the
 memory axis varies. Per query: wall (min of 2
 interleaved passes), completion, and the memory/disk spill bytes of
-the stages that completed during the query (status REST API). The
+the stages the query ran (read in-process by profile.py). The
 queries are the heaviest shuffle/sort/window/join shapes at sf1 —
 the 10x surface scripts/make_sf1.py builds (run it first).
 
@@ -35,7 +35,7 @@ registered oracled surface).
 Usage:
     python scripts/make_sf1.py /tmp/sf1            # once
     python scripts/memory_probe.py                 # parent: all tiers
-    python scripts/memory_probe.py --child 1g [8m] # (internal)
+    python scripts/memory_probe.py --child <tier>  # (internal)
 """
 
 from __future__ import annotations
@@ -44,8 +44,6 @@ import json
 import os
 import subprocess
 import sys
-import time
-import urllib.request
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
@@ -90,67 +88,14 @@ QUERIES = [
 ]
 
 
-def _stage_set(base: str) -> dict[tuple[int, int], dict] | None:
-    """Stage snapshot from the status REST API, or None when the UI is
-    unreachable — spill accounting then degrades to 'unavailable'
-    instead of killing the child and misrecording the tier as
-    jvm_died (ADVICE r8: the first urlopen failure used to escape)."""
-    try:
-        with urllib.request.urlopen(f"{base}/stages") as r:
-            stages = json.load(r)
-    except Exception:
-        return None
-    return {(s["stageId"], s["attemptId"]): s for s in stages}
-
-
-def _child(mem: str, threshold: str | None) -> None:
-    from pyspark.sql import SparkSession
-
+def _child(tag: str) -> None:
     from clickstream_pipeline_aws_kafka_docker_airflow__spark import registry
-    from clickstream_pipeline_aws_kafka_docker_airflow__spark.session import (
-        ENGINE_CONFS,
-        apply_engine_confs,
-    )
+    from clickstream_pipeline_aws_kafka_docker_airflow__spark.profile import profile
+    from clickstream_pipeline_aws_kafka_docker_airflow__spark.session import get_spark
 
-    tag = mem if threshold is None else f"{mem}-thr{threshold}"
-    b = SparkSession.builder.master(f"local[{CPUS}]").appName(
-        f"memory-probe-{tag}"
-    )
-    for k, v in ENGINE_CONFS.items():
-        b = b.config(k, v)
-    b = (
-        b.config("spark.sql.shuffle.partitions", str(max(CPUS * 2, 8)))
-        .config("spark.driver.memory", mem)
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4047")
-    )
-    # BOTH thresholds: AQE's runtime broadcast conversion is governed
-    # by spark.sql.adaptive.autoBroadcastJoinThreshold and does NOT
-    # follow the static conf's -1 on this build — measured: with only
-    # the static conf at -1, AQE still converted q18's joins to
-    # BroadcastHashJoin from true runtime sizes and the 1g build OOMed.
-    # Delivered via SPARK_GRAFT_EXTRA_CONFS so the override SURVIVES
-    # apply_engine_confs, which every load_table re-runs (the engine
-    # was silently clobbering per-tier thresholds back to 64 MB from
-    # inside each query until session.apply_engine_confs learned to
-    # re-apply the env hook last).
-    if threshold is not None:
-        os.environ["SPARK_GRAFT_EXTRA_CONFS"] = (
-            f"spark.sql.autoBroadcastJoinThreshold={threshold};"
-            f"spark.sql.adaptive.autoBroadcastJoinThreshold={threshold}"
-        )
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        ):
-            b = b.config(k, threshold)
-    spark = apply_engine_confs(b.getOrCreate())
-    # the ACTUALLY-BOUND UI URL, not the configured port: when 4047 is
-    # busy Spark walks spark.port.maxRetries to 4048+, and getConf()
-    # still reports the configured value (ADVICE r8)
-    ui = spark.sparkContext.uiWebUrl or "http://localhost:4047"
-    app = spark.sparkContext.applicationId
-    base = f"{ui}/api/v1/applications/{app}"
+    # the heap comes from SPARK_DRIVER_MEMORY and a tier's thresholds
+    # from SPARK_GRAFT_EXTRA_CONFS, both set by the parent (main)
+    spark = get_spark(app_name=f"memory-probe-{tag}", cpus=CPUS)
 
     qs = registry.queries()
     out: dict[str, dict] = {}
@@ -166,13 +111,12 @@ def _child(mem: str, threshold: str | None) -> None:
             )
             if not st["completed"]:
                 continue
-            before = _stage_set(base)
-            t0 = time.perf_counter()
             try:
-                qs[name](spark, SF_DIR).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                w = round(time.perf_counter() - t0, 2)
+                with profile(spark) as rec:
+                    qs[name](spark, SF_DIR).write.format("noop").mode(
+                        "overwrite"
+                    ).save()
+                w = round(rec.wall_s, 2)
                 st["wall_s"] = w if st["wall_s"] is None else min(st["wall_s"], w)
             except Exception as ex:  # noqa: BLE001 — record, keep probing
                 st["completed"] = False
@@ -192,18 +136,8 @@ def _child(mem: str, threshold: str | None) -> None:
                 if causes:
                     st["error_causes"] = causes
                 continue
-            after = _stage_set(base)
-            if before is None or after is None:
-                st["spill_unavailable"] = True  # UI unreachable; walls stand
-                continue
-            for key, s in after.items():
-                if key not in before and s.get("status") == "COMPLETE":
-                    st["spill_mem_mb"] += round(
-                        s.get("memoryBytesSpilled", 0) / 1e6, 1
-                    )
-                    st["spill_disk_mb"] += round(
-                        s.get("diskBytesSpilled", 0) / 1e6, 1
-                    )
+            st["spill_mem_mb"] += rec.totals["memory_spill_bytes"] / 1e6
+            st["spill_disk_mb"] += rec.totals["disk_spill_bytes"] / 1e6
     for st in out.values():
         st["spill_mem_mb"] = round(st["spill_mem_mb"], 1)
         st["spill_disk_mb"] = round(st["spill_disk_mb"], 1)
@@ -214,7 +148,7 @@ def _child(mem: str, threshold: str | None) -> None:
 
 def main() -> None:
     if len(sys.argv) > 2 and sys.argv[1] == "--child":
-        _child(sys.argv[2], sys.argv[3] if len(sys.argv) > 3 else None)
+        _child(sys.argv[2])
         return
     if not os.path.isdir(SF_DIR):
         print(f"{SF_DIR} missing — run scripts/make_sf1.py first", file=sys.stderr)
@@ -222,16 +156,25 @@ def main() -> None:
     tiers = {}
     for mem, thr in TIERS:
         tag = mem if thr is None else f"{mem}-thr{thr}"
-        env = dict(os.environ)
-        env["SPARK_GRAFT_CPUS"] = str(CPUS)
+        env = dict(os.environ, SPARK_GRAFT_CPUS=str(CPUS), SPARK_DRIVER_MEMORY=mem)
         # no-threshold tiers must measure the DEFAULTS: an inherited
         # SPARK_GRAFT_EXTRA_CONFS from a parent shell would silently
         # skew them relative to the protocol (ADVICE r8)
-        if thr is None:
-            env.pop("SPARK_GRAFT_EXTRA_CONFS", None)
-        args = [sys.executable, os.path.abspath(__file__), "--child", mem]
+        env.pop("SPARK_GRAFT_EXTRA_CONFS", None)
         if thr is not None:
-            args.append(thr)
+            # BOTH thresholds: AQE's runtime broadcast conversion is
+            # governed by spark.sql.adaptive.autoBroadcastJoinThreshold
+            # and does NOT follow the static conf's -1 on this build —
+            # measured: with only the static conf at -1, AQE still
+            # converted q18's joins to BroadcastHashJoin from true
+            # runtime sizes and the 1g build OOMed. The hook is applied
+            # last on every load_table, so the override survives the
+            # engine's own re-application of its defaults.
+            env["SPARK_GRAFT_EXTRA_CONFS"] = (
+                f"spark.sql.autoBroadcastJoinThreshold={thr};"
+                f"spark.sql.adaptive.autoBroadcastJoinThreshold={thr}"
+            )
+        args = [sys.executable, os.path.abspath(__file__), "--child", tag]
         try:
             p = subprocess.run(
                 args, capture_output=True, text=True, env=env, timeout=3600,
@@ -282,8 +225,8 @@ def main() -> None:
             f"(heap, autoBroadcastJoinThreshold) tier {TIERS} (driver.memory "
             f"is static), sf dir {SF_DIR} "
             "(10x surface), wall = min of 2 interleaved passes, spill = "
-            "memory/diskBytesSpilled summed over stages completed during "
-            "the query (status REST API) across both passes. 1g at "
+            "memory/diskBytesSpilled summed over the stages the query ran "
+            "(profile.py) across both passes. 1g at "
             f"{CPUS} cores is ~{1024 // CPUS} MB/core - several times "
             "denser than a production executor; the claim is completion "
             "by spilling with bounded slowdown, never OOM."

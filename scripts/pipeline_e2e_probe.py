@@ -14,8 +14,7 @@ the 100 TB workload because the stages SHARE the session: cache
 pressure, artifact reuse, and streaming-then-batch interactions happen
 exactly as a real curation run would see them.
 
-Recorded per stage: wall seconds, shuffle-write MB (REST status API
-delta), RDD-storage entry count after the stage (localCheckpoint
+Recorded per stage: wall seconds, shuffle-write MB (profile.py), RDD-storage entry count after the stage (localCheckpoint
 blocks + CacheManager pins), output rows. Final: the flat-state
 assertion — release_query_caches() returns storage to EMPTY, i.e. the
 whole composed run leaves no residual driver/executor storage beyond
@@ -35,7 +34,6 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
@@ -43,7 +41,11 @@ sys.path.insert(0, os.path.join(_REPO, "scripts"))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from scale_probe import _shuffle_write_bytes, _zipf_docs  # noqa: E402
+from scale_probe import _shuffle_mb, _zipf_docs  # noqa: E402
+
+from clickstream_pipeline_aws_kafka_docker_airflow__spark.profile import (  # noqa: E402
+    profile,
+)
 
 N_DOCS = 50_000  # 10x the sf0.1 documents table
 N_BATCHES = 5
@@ -54,19 +56,15 @@ def _storage_entries(spark) -> int:
 
 
 def _stage(spark, out: dict, name: str, fn):
-    s0 = _shuffle_write_bytes(spark)
-    t0 = time.perf_counter()
-    rows = fn()
-    wall = round(time.perf_counter() - t0, 2)
-    s1 = _shuffle_write_bytes(spark)
+    with profile(spark) as p:
+        rows = fn()
     rec = {
-        "wall_s": wall,
+        "wall_s": round(p.wall_s, 2),
         "storage_entries_after": _storage_entries(spark),
     }
     if rows is not None:
         rec["rows"] = rows
-    if s0 is not None and s1 is not None:
-        rec["shuffle_write_mb"] = round((s1 - s0) / 1e6, 1)
+    rec["shuffle_write_mb"] = _shuffle_mb(p)
     out["stages"][name] = rec
     print(f"[{name}] {rec}", flush=True)
 

@@ -16,7 +16,8 @@ Usage: python scripts/scale_probe.py [events|sketch|ann|iterative|dedup|
   strategies at 1x vs 10x corpus (Zipf-skewed token draws: hot
   shingles, hot prefix tokens), plus rounds-to-converge / state size
   for connected components and PageRank with hot join keys. Shuffle
-  bytes come from the Spark status REST API. The claim under test:
+  bytes and per-task distributions come from the in-process status
+  store (profile.py). The claim under test:
   candidates grow ~linearly (sub-quadratically) with corpus size, and
   the iterative kernels carry flat per-round state.
 
@@ -36,6 +37,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from clickstream_pipeline_aws_kafka_docker_airflow__spark.profile import (  # noqa: E402
+    profile,
+)
 from clickstream_pipeline_aws_kafka_docker_airflow__spark.session import (  # noqa: E402
     get_spark,
 )
@@ -259,9 +263,14 @@ def probe_iterative(spark) -> dict:
     from clickstream_pipeline_aws_kafka_docker_airflow__spark.operators.timeseries import (
         ewma_series,
     )
+    from clickstream_pipeline_aws_kafka_docker_airflow__spark.queries.sketch_q import (
+        cms_cells,
+    )
     from clickstream_pipeline_aws_kafka_docker_airflow__spark.streaming.cms_zone import (
-        _cells,
         estimates_from_zone,
+    )
+    from clickstream_pipeline_aws_kafka_docker_airflow__spark.streaming.upsert import (
+        overwrite_partitions,
     )
 
     d = tempfile.mkdtemp(prefix="probe_iter_")
@@ -287,21 +296,16 @@ def probe_iterative(spark) -> dict:
     zone = f"{d}/cms_zone"
 
     def build_zone():
-        from clickstream_pipeline_aws_kafka_docker_airflow__spark.session import (
-            temp_confs,
-        )
-
-        with temp_confs(
-            spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-        ):
-            (
-                _cells(e, "ts", "user_id")
-                .withColumn("batch_id", F.lit(0))
-                .repartition(1)
-                .write.partitionBy("batch_id")
-                .mode("overwrite")
-                .parquet(zone)
+        # one layer (batch 0) of the streaming zone's layout
+        cells = cms_cells(
+            e.select(
+                F.to_date("ts").cast("string").alias("dt"),
+                F.col("user_id").cast("string").alias("key"),
             )
+        )
+        overwrite_partitions(
+            cells.withColumn("batch_id", F.lit(0)).repartition(1), zone, "batch_id"
+        )
 
     out = {
         "probe": "iterative",
@@ -326,23 +330,6 @@ def probe_iterative(spark) -> dict:
 
 # ---------------------------------------------------------------------------
 # dedup probe: candidate growth + iterative state at 1x vs 10x
-
-
-def _shuffle_write_bytes(spark) -> int | None:
-    """Total shuffle WRITE bytes across completed stages, via the
-    status REST API (needs spark.ui.enabled). None if unavailable."""
-    import urllib.request
-
-    try:
-        port = spark.sparkContext.getConf().get("spark.ui.port", "4040")
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"http://localhost:{port}/api/v1/applications/{app}/stages"
-        ) as r:
-            stages = json.load(r)
-        return sum(s.get("shuffleWriteBytes", 0) for s in stages)
-    except Exception:
-        return None
 
 
 def _zipf_u(field: str, i, bits: int = 24):
@@ -433,14 +420,11 @@ def _dedup_at_scale(spark, d: str, n_docs: int) -> dict:
     )
 
     # MinHash-LSH: band join candidates, then exact verify
-    s0 = _shuffle_write_bytes(spark)
-    t0 = time.perf_counter()
-    cands = lsh_candidate_pairs(minhash_signatures(sh)).localCheckpoint()
-    out["lsh_candidates"] = cands.count()
-    out["lsh_s"] = round(time.perf_counter() - t0, 2)
-    s1 = _shuffle_write_bytes(spark)
-    if s0 is not None and s1 is not None:
-        out["lsh_shuffle_mb"] = round((s1 - s0) / 1e6, 1)
+    with profile(spark) as rec:
+        cands = lsh_candidate_pairs(minhash_signatures(sh)).localCheckpoint()
+        out["lsh_candidates"] = cands.count()
+    out["lsh_s"] = round(rec.wall_s, 2)
+    out["lsh_shuffle_mb"] = _shuffle_mb(rec)
 
     # PPJoin: prefix-filter candidate space + exact pairs
     tk = token_set_table(docs).localCheckpoint()
@@ -454,14 +438,11 @@ def _dedup_at_scale(spark, d: str, n_docs: int) -> dict:
         .select("doc_a", "doc_b")
         .distinct()
     )
-    s0 = _shuffle_write_bytes(spark)
-    t0 = time.perf_counter()
-    out["ppjoin_candidates"] = ppj_cands.count()
-    out["ppjoin_pairs"] = ppjoin_pairs(docs, toks=tk, prefix=prefix).count()
-    out["ppjoin_s"] = round(time.perf_counter() - t0, 2)
-    s1 = _shuffle_write_bytes(spark)
-    if s0 is not None and s1 is not None:
-        out["ppjoin_shuffle_mb"] = round((s1 - s0) / 1e6, 1)
+    with profile(spark) as rec:
+        out["ppjoin_candidates"] = ppj_cands.count()
+        out["ppjoin_pairs"] = ppjoin_pairs(docs, toks=tk, prefix=prefix).count()
+    out["ppjoin_s"] = round(rec.wall_s, 2)
+    out["ppjoin_shuffle_mb"] = _shuffle_mb(rec)
 
     # connected components over the verified near-dup pairs
     pairs = (
@@ -513,15 +494,12 @@ def probe_dedup(spark) -> dict:
             edges.select("src").union(edges.select("dst")).distinct().count()
         )}
         for iters in (3, 6):
-            s0 = _shuffle_write_bytes(spark)
-            t0 = time.perf_counter()
-            pagerank_int(edges, n_iters=iters).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            row[f"iters{iters}_s"] = round(time.perf_counter() - t0, 2)
-            s1 = _shuffle_write_bytes(spark)
-            if s0 is not None and s1 is not None:
-                row[f"iters{iters}_shuffle_mb"] = round((s1 - s0) / 1e6, 1)
+            with profile(spark) as rec:
+                pagerank_int(edges, n_iters=iters).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+            row[f"iters{iters}_s"] = round(rec.wall_s, 2)
+            row[f"iters{iters}_shuffle_mb"] = _shuffle_mb(rec)
         pr[tag] = row
     out["pagerank"] = pr
     return out
@@ -531,59 +509,30 @@ def probe_dedup(spark) -> dict:
 # skew probe: hot-key sessionization, direct vs two-phase
 
 
-def _stages_snapshot(spark) -> set[tuple[int, int]]:
-    import urllib.request
-
-    try:
-        port = spark.sparkContext.getConf().get("spark.ui.port", "4040")
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"http://localhost:{port}/api/v1/applications/{app}/stages"
-        ) as r:
-            return {(s["stageId"], s["attemptId"]) for s in json.load(r)}
-    except Exception:
-        return set()
+def _shuffle_mb(rec) -> float:
+    """Shuffle WRITE megabytes of a profiled block."""
+    return round(rec.totals["shuffle_write_bytes"] / 1e6, 1)
 
 
-def _heaviest_stage_tasks(spark, before: set) -> dict | None:
+def _heaviest_stage_tasks(rec) -> dict:
     """Per-task wall + shuffle-read distribution (median / max) of the
-    heaviest-shuffle-read stage completed since ``before`` — the window
-    stage under test. The max/median ratio IS the straggler factor."""
-    import urllib.request
-
-    try:
-        port = spark.sparkContext.getConf().get("spark.ui.port", "4040")
-        app = spark.sparkContext.applicationId
-        base = f"http://localhost:{port}/api/v1/applications/{app}"
-        with urllib.request.urlopen(f"{base}/stages") as r:
-            stages = json.load(r)
-        new = [
-            s
-            for s in stages
-            if (s["stageId"], s["attemptId"]) not in before
-            and s.get("status") == "COMPLETE"
-        ]
-        if not new:
-            return None
-        s = max(new, key=lambda s: s.get("shuffleReadBytes", 0))
-        url = (
-            f"{base}/stages/{s['stageId']}/{s['attemptId']}/taskSummary"
-            "?quantiles=0.5,1.0"
-        )
-        with urllib.request.urlopen(url) as r:
-            q = json.load(r)
-        run_med, run_max = q["executorRunTime"]
-        rd_med, rd_max = q["shuffleReadMetrics"]["readBytes"]
-        return {
-            "n_tasks": s.get("numCompleteTasks"),
-            "task_wall_med_s": round(run_med / 1000, 2),
-            "task_wall_max_s": round(run_max / 1000, 2),
-            "task_read_med_mb": round(rd_med / 1e6, 1),
-            "task_read_max_mb": round(rd_max / 1e6, 1),
-            "straggler_factor": round(run_max / max(run_med, 1), 1),
-        }
-    except Exception:
-        return None
+    heaviest-shuffle-read stage the profiled block completed — the
+    window stage under test. The max/median ratio IS the straggler
+    factor."""
+    s = max(
+        (s for s in rec.stage_table if s["status"] == "COMPLETE"),
+        key=lambda s: s["shuffle_read_bytes"],
+    )
+    q = rec.task_median_max(s)
+    (run_med, run_max), (rd_med, rd_max) = q["run_ms"], q["shuffle_read_bytes"]
+    return {
+        "n_tasks": s["tasks"],
+        "task_wall_med_s": round(run_med / 1000, 2),
+        "task_wall_max_s": round(run_max / 1000, 2),
+        "task_read_med_mb": round(rd_med / 1e6, 1),
+        "task_read_max_mb": round(rd_max / 1e6, 1),
+        "straggler_factor": round(run_max / max(run_med, 1), 1),
+    }
 
 
 def _skewed_events(spark, d: str, n: int, hot_share: float = 0.2) -> str:
@@ -645,12 +594,9 @@ def probe_skew(spark) -> dict:
             ("direct", lambda df: sessionize_direct(df)),
             ("two_phase", lambda df: sessionize_two_phase(df)),
         ):
-            before = _stages_snapshot(spark)
-            t0 = time.perf_counter()
-            fn(e).write.format("noop").mode("overwrite").save()
-            wall = round(time.perf_counter() - t0, 2)
-            m = _heaviest_stage_tasks(spark, before) or {}
-            row[mode] = {"wall_s": wall, **m}
+            with profile(spark) as rec:
+                fn(e).write.format("noop").mode("overwrite").save()
+            row[mode] = {"wall_s": round(rec.wall_s, 2), **_heaviest_stage_tasks(rec)}
         if tag == "x1":
             a = sessionize_direct(e).groupBy().agg(
                 F.count(F.lit(1)), F.sum("n_events"), F.max("session_idx")
@@ -778,12 +724,9 @@ def probe_skewjoin(spark) -> dict:
                     F.sum(F.length("payload") + F.length("attr")).alias("b"),
                 )
             )
-            before = _stages_snapshot(spark)
-            t0 = time.perf_counter()
-            digests[mode] = j.collect()[0].asDict()
-            wall = round(time.perf_counter() - t0, 2)
-            m = _heaviest_stage_tasks(spark, before) or {}
-            out[mode] = {"wall_s": wall, **m}
+            with profile(spark) as rec:
+                digests[mode] = j.collect()[0].asDict()
+            out[mode] = {"wall_s": round(rec.wall_s, 2), **_heaviest_stage_tasks(rec)}
         out["digests_match"] = digests["skewjoin_off"] == digests["skewjoin_on"]
         out["joined_rows"] = digests["skewjoin_on"]["n"]
     finally:
@@ -907,13 +850,10 @@ def _admission_at_scale(spark, d: str, n_old: int, n_new: int) -> dict:
         spark.read.parquet(bands_path),
         sizes=spark.read.parquet(sizes_path),
     )
-    s0 = _shuffle_write_bytes(spark)
-    t0 = time.perf_counter()
-    verdicts.write.format("noop").mode("overwrite").save()
-    out["wall_s"] = round(time.perf_counter() - t0, 2)
-    s1 = _shuffle_write_bytes(spark)
-    if s0 is not None and s1 is not None:
-        out["shuffle_mb"] = round((s1 - s0) / 1e6, 2)
+    with profile(spark) as rec:
+        verdicts.write.format("noop").mode("overwrite").save()
+    out["wall_s"] = round(rec.wall_s, 2)
+    out["shuffle_mb"] = round(rec.totals["shuffle_write_bytes"] / 1e6, 2)
     out["rejected"] = verdicts.where(~F.col("admitted")).count()
     return out
 
@@ -1005,19 +945,15 @@ def probe_users(spark) -> dict:
         sf_dir = _users_events_dir(spark, d, n_users)
         row: dict = {"n_users": n_users, "n_events": n_users * 20}
         for name in USERS_FAMILY:
-            before = _stages_snapshot(spark)
-            s0 = _shuffle_write_bytes(spark)
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            wall = round(time.perf_counter() - t0, 2)
-            s1 = _shuffle_write_bytes(spark)
-            m = _heaviest_stage_tasks(spark, before) or {}
-            q: dict = {"wall_s": wall, **m}
-            if s0 is not None and s1 is not None:
-                q["shuffle_mb"] = round((s1 - s0) / 1e6, 1)
-            row[name] = q
+            with profile(spark) as rec:
+                qs[name](spark, sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+            row[name] = {
+                "wall_s": round(rec.wall_s, 2),
+                **_heaviest_stage_tasks(rec),
+                "shuffle_mb": _shuffle_mb(rec),
+            }
         # r10 (verdict #5): the broadcast-ntile rfm plan derives its
         # quartile cuts ONCE per source identity and memoizes the
         # composites on the driver — prove that state is dims x
@@ -1054,34 +990,10 @@ def probe_users(spark) -> dict:
 PROBES = {"events": probe_events, "sketch": probe_sketch, "ann": probe_ann, "iterative": probe_iterative, "dedup": probe_dedup, "skew": probe_skew, "skewjoin": probe_skewjoin, "dupflood": probe_dupflood, "admission": probe_admission, "users": probe_users}
 
 
-def _probe_spark():
-    """get_spark twin with the UI (status REST API) enabled, so probes
-    can read per-step shuffle-write deltas."""
-    import os as _os
-
-    from pyspark.sql import SparkSession
-
-    from clickstream_pipeline_aws_kafka_docker_airflow__spark.session import (
-        ENGINE_CONFS,
-        apply_engine_confs,
-    )
-
-    cpus = int(_os.environ.get("SPARK_GRAFT_CPUS") or _os.cpu_count() or 4)
-    b = SparkSession.builder.master(f"local[{cpus}]").appName("scale-probe")
-    for k, v in ENGINE_CONFS.items():
-        b = b.config(k, v)
-    b = b.config("spark.sql.shuffle.partitions", str(max(cpus * 2, 8)))
-    b = b.config(
-        "spark.driver.memory", _os.environ.get("SPARK_DRIVER_MEMORY", "8g")
-    )
-    b = b.config("spark.ui.enabled", "true").config("spark.ui.port", "4046")
-    return apply_engine_confs(b.getOrCreate())
-
-
 def main() -> None:
     which = sys.argv[1] if len(sys.argv) > 1 else "all"
     names = list(PROBES) if which == "all" else [which]
-    spark = _probe_spark()
+    spark = get_spark(app_name="scale-probe")
     for n in names:
         out = PROBES[n](spark)
         print(json.dumps(out), flush=True)

@@ -297,14 +297,25 @@ def test_sessionize_drops_null_ts(spark):
         assert rows[0]["n_events"] == 2, mode
 
 
-def test_two_phase_sessionize_parity_on_hostile_data(spark, monkeypatch):
+def test_two_phase_sessionize_parity_on_hostile_data(spark):
     """The skew-proof strategy shares the dispatcher's NULL-ts rule, so
-    it matches the oracle on hostile and empty data too."""
-    monkeypatch.setenv("SPARK_GRAFT_SESSIONIZE_MODE", "two_phase")
+    it matches sessionize_30min's oracle on hostile and empty data too."""
+    from clickstream_pipeline_aws_kafka_docker_airflow__spark.io import load_table
+    from clickstream_pipeline_aws_kafka_docker_airflow__spark.operators.sessionize import (
+        sessionize,
+    )
+    from clickstream_pipeline_aws_kafka_docker_airflow__spark.queries.events_q import (
+        SESSION_GAP_US,
+    )
+
+    def two_phase(spark, sf_dir):
+        e = load_table(spark, sf_dir, "events")
+        return sessionize(e, SESSION_GAP_US, mode="two_phase")
+
     for sf in (ADV_SF, EMPTY_SF):
         assert_parity(
-            spark, sf, "sessionize_30min",
-            E.queries()["sessionize_30min"], E.oracle_sql()["sessionize_30min"],
+            spark, sf, "sessionize_30min", two_phase,
+            E.oracle_sql()["sessionize_30min"],
         )
 
 

@@ -10,7 +10,9 @@ from pyspark.sql.conf import RuntimeConfig
 
 from clickstream_pipeline_aws_kafka_docker_airflow__spark import io
 from clickstream_pipeline_aws_kafka_docker_airflow__spark.session import (
+    ENGINE_CONFS,
     apply_engine_confs,
+    get_spark,
 )
 
 
@@ -46,3 +48,20 @@ def test_runtime_extra_conf_error_propagates(spark, monkeypatch):
     with pytest.raises(IllegalArgumentException):
         apply_engine_confs(spark)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_extra_conf_override_of_engine_key_holds(spark, sf_dir, monkeypatch):
+    """An extras override of an ENGINE_CONFS key survives ``get_spark``
+    and ``io.load_table``: the hook is applied after the engine's own
+    value."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONFS", f"{key}=1234")
+    try:
+        session = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)
+        assert session.conf.get(key) == "1234"
+        io.load_table(spark, sf_dir, "events")
+        assert spark.conf.get(key) == "1234"
+    finally:
+        monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONFS")
+        apply_engine_confs(spark)
+    assert spark.conf.get(key) == ENGINE_CONFS[key]

@@ -10,6 +10,7 @@ import os
 
 import pytest
 
+from clickstream_pipeline_aws_kafka_docker_airflow__spark.profile import profile
 from clickstream_pipeline_aws_kafka_docker_airflow__spark.streaming.healthcheck import (
     check_freshness,
 )
@@ -54,14 +55,9 @@ def test_no_schema_inference_scan(spark, tmp_path):
     data read); with the explicit trivial schema, no Spark job should
     scan more than the limit(1) probe — assert via job count."""
     _write_day(tmp_path, _DAY)
-    sc = spark.sparkContext
-    sc.setJobGroup("hc-probe", "freshness")
-    try:
+    with profile(spark) as rec:
         assert check_freshness(spark, str(tmp_path), lookback_minutes=20)
-    finally:
-        sc._jsc.sc().clearJobGroup()
-    jobs = sc.statusTracker().getJobIdsForGroup("hc-probe") or []
-    assert len(jobs) <= 1, "schema inference ran extra jobs"
+    assert rec.jobs <= 1, "schema inference ran extra jobs"
 
 
 def test_unreadable_day_raises_not_stale(spark, tmp_path):

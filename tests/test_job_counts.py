@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 
 from clickstream_pipeline_aws_kafka_docker_airflow__spark import registry
+from clickstream_pipeline_aws_kafka_docker_airflow__spark.profile import profile
 
 from conftest import SF_SMOKE
 
@@ -81,19 +82,12 @@ CEILINGS = {
 
 @pytest.mark.parametrize("name", sorted(CEILINGS))
 def test_warm_job_count_within_ceiling(spark, name):
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     q = registry.queries()[name]
-    for i in range(2):  # first run may build artifacts; pin the second
-        group = f"jobcount:{name}:{i}"
-        sc.setJobGroup(group, name)
-        try:
+    for _ in range(2):  # first run may build artifacts; pin the second
+        with profile(spark) as rec:
             q(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
-        finally:
-            sc._jsc.sc().clearJobGroup()
-    warm = len(tracker.getJobIdsForGroup(f"jobcount:{name}:1") or [])
-    assert warm <= CEILINGS[name], (
-        f"{name}: warm run launched {warm} Spark jobs "
+    assert rec.jobs <= CEILINGS[name], (
+        f"{name}: warm run launched {rec.jobs} Spark jobs "
         f"(ceiling {CEILINGS[name]}) — a collect/eager-checkpoint/"
         "cache-loss regression"
     )

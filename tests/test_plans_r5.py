@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from clickstream_pipeline_aws_kafka_docker_airflow__spark import registry
 from clickstream_pipeline_aws_kafka_docker_airflow__spark.io import load_table
 from clickstream_pipeline_aws_kafka_docker_airflow__spark.memo import MEMO
+from clickstream_pipeline_aws_kafka_docker_airflow__spark.profile import profile
 from clickstream_pipeline_aws_kafka_docker_airflow__spark.operators import (
     artifacts,
     projection,
@@ -88,15 +89,13 @@ def test_query_vector_slice_collected_once_per_plan(spark):
     Spark job)."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
     first = similarity.collect_query_vectors(emb, 5)
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or [])
     hits = MEMO.hits["query_vectors"]
-    again = similarity.collect_query_vectors(
-        load_table(spark, SF_SMOKE, "embeddings"), 5
-    )
-    after = len(tracker.getJobIdsForGroup(None) or [])
+    with profile(spark) as rec:
+        again = similarity.collect_query_vectors(
+            load_table(spark, SF_SMOKE, "embeddings"), 5
+        )
     assert again == first
-    assert after == before, "cache miss ran a Spark job"
+    assert rec.jobs == 0, "cache miss ran a Spark job"
     assert MEMO.hits["query_vectors"] == hits + 1, "slice not memoized"
 
 
@@ -181,17 +180,13 @@ def test_memo_site_hits_invalidates_and_stays_bounded(
     monkeypatch.setattr(MEMO, "capacity", 4)
     d = str(tmp_path / "sf")
     shutil.copytree(SF_SMOKE, d)
-    tracker = spark.sparkContext.statusTracker()
-
-    def jobs():
-        return len(tracker.getJobIdsForGroup(None) or [])
-
     first = call(spark, d)
-    hits, misses, n_jobs = MEMO.hits[kind], MEMO.misses[kind], jobs()
-    again = call(spark, d)
+    hits, misses = MEMO.hits[kind], MEMO.misses[kind]
+    with profile(spark) as rec:
+        again = call(spark, d)
     assert again is first
     assert (MEMO.hits[kind], MEMO.misses[kind]) == (hits + 1, misses)
-    assert jobs() == n_jobs, "memo hit ran a Spark job"
+    assert rec.jobs == 0, "memo hit ran a Spark job"
 
     # rewrite in place: same path, one vector fewer
     path = f"{d}/embeddings.parquet"

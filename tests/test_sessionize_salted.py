@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from clickstream_pipeline_aws_kafka_docker_airflow__spark.io import load_table
 from clickstream_pipeline_aws_kafka_docker_airflow__spark.operators.sessionize import (
+    sessionize,
     sessionize_direct,
     sessionize_two_phase,
 )
@@ -129,17 +130,14 @@ def test_phase1_partitions_on_bucket(spark):
     assert any("_b" in p and "user_id" in p for p in parts), parts
 
 
-def test_registered_query_env_dispatch(spark, monkeypatch):
-    """sessionize_30min honors SPARK_GRAFT_SESSIONIZE_MODE and stays
-    value-identical across modes (the oracle-stays-green contract)."""
+def test_registered_query_equals_two_phase(spark):
+    """sessionize_30min (the direct strategy) and the two_phase operator
+    mode return identical rows (the oracle-stays-green contract)."""
     from clickstream_pipeline_aws_kafka_docker_airflow__spark import registry
 
-    q = registry.queries()["sessionize_30min"]
-    monkeypatch.delenv("SPARK_GRAFT_SESSIONIZE_MODE", raising=False)
-    direct = _rows(q(spark, SF_SMOKE))
-    monkeypatch.setenv("SPARK_GRAFT_SESSIONIZE_MODE", "two_phase")
-    two = _rows(q(spark, SF_SMOKE))
-    assert direct == two
+    direct = _rows(registry.queries()["sessionize_30min"](spark, SF_SMOKE))
+    e = load_table(spark, SF_SMOKE, "events")
+    assert direct == _rows(sessionize(e, GAP_US, mode="two_phase"))
 
 
 def test_two_phase_null_user_and_ties(spark):
